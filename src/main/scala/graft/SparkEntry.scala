@@ -625,12 +625,16 @@ object SparkEntry {
     // DuckDB reads the same CSV glob directly (read_csv), so the
     // boundary-format scan is hash-compared end to end, not just the
     // parquet star schema.
-    "src_csv_multi" -> ((s, _) =>
+    "src_csv_multi" -> ((s, _) => {
+      val corpus = "/root/reference/Data"
+      if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(corpus)))
+        throw new IllegalStateException(s"reference corpus absent at $corpus")
       graft.ops.Validate.dropNullsAny(Seq("order_id"))(
-        Sources.csvMulti(s, "/root/reference/Data/orders", graft.schema.Schemas.orders))
+        Sources.csvMulti(s, s"$corpus/orders", graft.schema.Schemas.orders))
         .groupBy(col("status"))
         .agg(count(lit(1)).as("n_orders"))
-        .orderBy(col("status"))),
+        .orderBy(col("status"))
+    }),
 
     // beyond-reference layout: the z-order clustering key (ops.Layout /
     // functions.ZOrder2) — bit-for-bit oracle of the Morton interleave

@@ -61,14 +61,15 @@ object Sources {
       .csv(path)
   }
 
-  /** Columnar scan for the internal/validated layer (typed Parquet end to
-    * end; CSV only at the boundary — SURVEY.md §7.5 item 7). */
   /** JSON-lines source with an explicit schema (inference would scan
     * the data twice and guess types — never at 100 TB). */
   def jsonl(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
-  /** The schema comes from ONE footer read driver-side when possible:
+  /** Columnar scan for the internal/validated layer (typed Parquet end to
+    * end; CSV only at the boundary — SURVEY.md §7.5 item 7).
+    *
+    * The schema comes from ONE footer read driver-side when possible:
     * stock inference funnels a representative footer through a whole
     * Spark job (`mergeSchemasInParallel`) even with `mergeSchema=false`
     * — pure scheduling overhead paid once per table read, on every

@@ -28,7 +28,9 @@ class RoundingSpec extends SparkSpec {
 
   test("validated layer round-trips through the CSV boundary with types intact") {
     val dir = java.nio.file.Files.createTempDirectory("graft-csvrt").toString
-    val orders = Sources.csvMulti(spark, "/root/reference/Data/orders", Schemas.orders)
+    val raw = java.nio.file.Files.createTempDirectory("graft-csvrt-raw").toString
+    graft.RawFixture.stage(raw)
+    val orders = Sources.csvMulti(spark, s"$raw/orders", Schemas.orders)
     val validated = Validate.validateOrders(orders)
     // boundary write (the reference's Task-1 output is CSV)
     graft.io.Sinks.csv(validated.coalesce(1), s"$dir/orders")

@@ -18,6 +18,9 @@ class GoldenE2ESpec extends SparkSpec {
   private val dataDir = "/root/reference/Data"
 
   private lazy val kpis = {
+    // the golden values are the corpus's own; nothing else can stand in
+    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dataDir)))
+      fail(s"reference corpus absent at $dataDir")
     val products = Sources.csv(spark, s"$dataDir/products.csv", Schemas.products)
     val orders = Sources.csvMulti(spark, s"$dataDir/orders", Schemas.orders)
     val items = Sources.csvMulti(spark, s"$dataDir/order_items", Schemas.orderItems)

@@ -1,11 +1,11 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{RawFixture, SparkSpec}
 import graft.io.{Sinks, Sources}
 
 /** Streaming-layer tests (SURVEY.md §5.2 item 5): trigger gate,
@@ -14,22 +14,10 @@ import graft.io.{Sinks, Sources}
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Copy a small slice of the reference corpus as the raw landing dir. */
-  private def stageRaw(dir: String): Unit = {
-    Files.createDirectories(Paths.get(s"$dir/orders"))
-    Files.createDirectories(Paths.get(s"$dir/order_items"))
-    Files.copy(Paths.get("/root/reference/Data/products.csv"),
-      Paths.get(s"$dir/products.csv"))
-    Files.copy(Paths.get("/root/reference/Data/orders/orders_part1.csv"),
-      Paths.get(s"$dir/orders/orders_part1.csv"))
-    Files.copy(Paths.get("/root/reference/Data/order_items/order_items_part1.csv"),
-      Paths.get(s"$dir/order_items/order_items_part1.csv"))
-  }
-
   test("gate waits for all three inputs, opens when they land") {
     val dir = Files.createTempDirectory("graft-gate").toString
     assert(!Streaming.gate(spark, dir))
-    stageRaw(dir)
+    RawFixture.stage(dir)
     assert(Streaming.gate(spark, dir))
   }
 
@@ -38,7 +26,7 @@ class StreamingSpec extends SparkSpec {
     val raw = s"$root/raw"
     val work = s"$root/work"
     val kvDir = s"$root/kv"
-    stageRaw(raw)
+    RawFixture.stage(raw)
     assert(Streaming.gate(spark, raw))
 
     // DURABLE kv sink: the pipeline's KPI state lives on disk, not in the
@@ -48,7 +36,7 @@ class StreamingSpec extends SparkSpec {
       () => new Sinks.FileKvClient(kvDir), batchTimeMillis = 0L)
     q.awaitTermination()
 
-    // sinks committed: both KV tables populated from the one-part slice
+    // sinks committed: both KV tables populated from the fixture drop
     val orderKpi = Sinks.FileKv.read(kvDir, "order_kpi")
     val catKpi = Sinks.FileKv.read(kvDir, "category_kpi")
     assert(orderKpi.nonEmpty && catKpi.nonEmpty)

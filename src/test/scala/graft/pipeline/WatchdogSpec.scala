@@ -2,10 +2,13 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQueryException
 
-import graft.SparkSpec
+import graft.{RawFixture, SparkSpec}
+import graft.io.Sinks
 
 /** Budget enforcement — the reference's 300 s `TimeoutSeconds`
   * (StateMachine.txt:31,68) made a RUNTIME behavior: over-budget work
@@ -97,5 +100,69 @@ class WatchdogSpec extends SparkSpec {
         Thread.sleep(100)
       assert(recorded(), "terminal FAILED record must be durable")
     } finally spark.streams.removeListener(listener)
+  }
+
+  /** A fixture drop under a fresh directory: (raw dir, work dir). */
+  private def stagedDrop(): (String, String) = {
+    val root = Files.createTempDirectory("graft-watchdog-batch").toString
+    RawFixture.stage(s"$root/raw")
+    (s"$root/raw", s"$root/work")
+  }
+
+  private def rawFiles(raw: String): Seq[String] =
+    Files.walk(java.nio.file.Paths.get(raw)).iterator().asScala
+      .filter(Files.isRegularFile(_)).map(_.toString).toVector.sorted
+
+  test("runAllWithBudget cancels the sink jobs on their worker threads and leaves raw unarchived") {
+    // a first drop warms the pipeline's code paths, so the steps before
+    // the sinks take a fraction of the budget below
+    val (warmRaw, warmWork) = stagedDrop()
+    Batch.runAll(spark, warmRaw, warmWork, () => new Sinks.InMemoryKvClient, 0L)
+    val (raw, work) = stagedDrop()
+    val before = rawFiles(raw)
+    // every KV put blocks until its task is interrupted, so the budget
+    // expires inside the concurrent sink step
+    val budget = 8000L
+    val t0 = System.currentTimeMillis()
+    val e = intercept[Watchdog.BudgetExceededException] {
+      Batch.runAllWithBudget(spark, raw, work, WatchdogSpec.blockingKv, budget, 0L)
+    }
+    val late = System.currentTimeMillis() - t0 - budget
+    assert(e.budgetMillis == budget)
+    assert(late < 10000, s"cancellation landed $late ms after the deadline")
+    assert(WatchdogSpec.blockedPuts.get > 0, "the budget expired before the KV sink ran")
+    assert(Streaming.readStatuses(s"$work/status").exists(m =>
+      m.get("run_id").contains(e.runId) && m.get("status").contains("FAILED") &&
+        m.get("exception").exists(_.contains("budget"))))
+    assert(rawFiles(raw) == before)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$work/archive")))
+  }
+
+  test("a failing KV client makes runAll rethrow, and the archive does not run") {
+    val (raw, work) = stagedDrop()
+    val before = rawFiles(raw)
+    val e = intercept[Exception] {
+      Batch.runAll(spark, raw, work, WatchdogSpec.failingKv, 0L)
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("kv store unavailable")), e)
+    assert(rawFiles(raw) == before)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$work/archive")))
+  }
+}
+
+object WatchdogSpec {
+  val blockedPuts = new java.util.concurrent.atomic.AtomicInteger()
+
+  val blockingKv: () => Sinks.KvClient = () => new Sinks.KvClient {
+    def put(table: String, key: String, item: Map[String, String]): Unit = {
+      blockedPuts.incrementAndGet()
+      Thread.sleep(60000L)
+    }
+  }
+
+  val failingKv: () => Sinks.KvClient = () => new Sinks.KvClient {
+    def put(table: String, key: String, item: Map[String, String]): Unit =
+      throw new IllegalStateException("kv store unavailable")
   }
 }
