@@ -318,7 +318,10 @@ object Sinks {
     * `archiveBase/<ts>/`, preserving relative paths. The reference copies
     * then deletes object-by-object; on a Hadoop FS a rename is atomic per
     * file and metadata-only. Must run AFTER sink commit (SURVEY.md §7.5
-    * item 5) — callers sequence it inside `foreachBatch`. */
+    * item 5) — callers sequence it inside `foreachBatch`. Throws an
+    * `IOException` when a move fails (`mkdirs` or `rename` returns
+    * false, e.g. the destination already exists): a raw file left in
+    * place would be read again by the next run. */
   def archive(spark: SparkSession, srcDir: String, archiveBase: String, ts: String): Seq[String] = {
     val fs: FileSystem = new Path(srcDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -329,8 +332,8 @@ object Sinks {
     val moved = files.map { f =>
       val rel = src.toUri.relativize(fs.makeQualified(f).toUri).getPath
       val dst = new Path(s"$archiveBase/$ts/$rel")
-      fs.mkdirs(dst.getParent)
-      fs.rename(f, dst)
+      if (!fs.mkdirs(dst.getParent) || !fs.rename(f, dst))
+        throw new java.io.IOException(s"could not archive $f to $dst")
       dst.toString
     }
     moved

@@ -1,0 +1,38 @@
+package graft.ops
+
+/** Bounded least-recently-used map, safe for concurrent use: the one
+  * eviction policy of the manifest layer's per-JVM memos. Every insert
+  * evicts least-recently-used entries until at most `maxEntries`
+  * remain and their summed `weight` is at most `maxWeight`; an entry
+  * heavier than `maxWeight` on its own is never kept. `maxEntries` is
+  * re-read on every insert, so a lowered bound takes effect at the next
+  * one. */
+private[graft] final class Lru[K, V](maxEntries: => Int,
+                                     maxWeight: Long = Long.MaxValue,
+                                     weight: V => Long = (_: V) => 0L) {
+  private val map = new java.util.LinkedHashMap[K, V](16, 0.75f, true)
+  private var totalWeight = 0L
+
+  def get(k: K): Option[V] = synchronized(Option(map.get(k)))
+
+  def put(k: K, v: V): Unit = synchronized {
+    Option(map.remove(k)).foreach(old => totalWeight -= weight(old))
+    val w = weight(v)
+    if (w <= maxWeight) {
+      map.put(k, v)
+      totalWeight += w
+      val it = map.values().iterator()
+      while ((map.size > maxEntries || totalWeight > maxWeight) && it.hasNext) {
+        totalWeight -= weight(it.next())
+        it.remove()
+      }
+    }
+  }
+
+  /** The entry for `k`, created by `make` (under the lock) if absent. */
+  def getOrElseUpdate(k: K, make: => V): V = synchronized {
+    get(k).getOrElse { val v = make; put(k, v); v }
+  }
+
+  def size: Int = synchronized(map.size)
+}

@@ -162,13 +162,6 @@ object Manifest {
     * file is marked overflow and never pruned out. */
   val ValuesCap: Int = 64
 
-  /** One-pass write stats (default true): collect per-file manifest
-    * stats during the batch write instead of a full read-back of the
-    * just-written files. `false` restores the read-back pass — kept as
-    * the parity oracle for the spec and as an operational escape
-    * hatch. */
-  val WriteInlineStatsKey = "graft.write.inlineStats"
-
   /** Bloom filter geometry: m bits per file per column, k seeded
     * hashes. 32 Ki bits = 4 KiB/file/col — ~1% false positives at
     * ~3.3k distinct values per file, saturated-but-sound (no false
@@ -200,9 +193,6 @@ object Manifest {
     * closure. Conf-tunable for tests. */
   val AppendMaxChainKey = "graft.manifest.append.maxChain"
   private val AppendMaxChainDefault = 64L
-  /** Escape hatch: `false` forces every append through the compacting
-    * path (the pre-linked-manifest layout). */
-  val AppendLinkedKey = "graft.manifest.append.linked"
   /** Cumulative-remove bound for a linked commit: the chain's base
     * file carries every path removed along it (read once per
     * listing), so once the set stops being small — a steady partition
@@ -219,7 +209,7 @@ object Manifest {
     * expressions on BOTH the write path (over file rows) and the probe
     * path (over a one-row frame), so writer and reader can never
     * disagree on the hash. */
-  private def bloomPosition(c: org.apache.spark.sql.Column, i: Int) =
+  private[graft] def bloomPosition(c: org.apache.spark.sql.Column, i: Int) =
     pmod(xxhash64(lit(i), c), lit(BloomBits.toLong))
 
   /** Is bit `pos` set in the packed-long `bits` array? `pos` may be a
@@ -332,39 +322,25 @@ object Manifest {
     *    clear that would stampede every other table back into
     *    O(retention) pointer re-verification. */
   private[ops] var VisibleCachePerTable = 4096
-  /** Outer bound too: a long-lived driver touching many distinct table
+  /** Outer bound too, shared by every per-TABLE memo (this cache and
+    * [[extCache]]): a long-lived driver touching many distinct table
     * dirs (a catalog sweep, per-tenant tables) must not retain a dead
-    * table's cache map forever — least-recently-USED tables evict
-    * whole. Eviction only costs the evicted table a re-verification
-    * walk on its next touch; 512 concurrently-hot tables per driver is
-    * far above any real working set. */
+    * table's entries forever — least-recently-USED tables evict whole.
+    * Eviction only costs the evicted table a re-verification walk (or
+    * one `_ext` re-read) on its next touch; 512 concurrently-hot tables
+    * per driver is far above any real working set. */
   private[ops] var VisibleCacheTables = 512
   private val VisibleFreshMillis = 5000L
   private val visibleCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[
-        String, java.util.Map[String, java.lang.Boolean]](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[
-              String, java.util.Map[String, java.lang.Boolean]]): Boolean =
-          size() > VisibleCacheTables
-      })
-  private def tableVisibleCache(table: String)
-      : java.util.Map[String, java.lang.Boolean] =
-    visibleCache.computeIfAbsent(table, _ =>
-      java.util.Collections.synchronizedMap(
-        new java.util.LinkedHashMap[String, java.lang.Boolean](
-          64, 0.75f, true) {
-          override def removeEldestEntry(
-              e: java.util.Map.Entry[String, java.lang.Boolean]): Boolean =
-            size() > VisibleCachePerTable
-        }))
-  private[ops] def visibleTableCount: Int = visibleCache.size()
-  private[ops] def clearVisibleCacheForTest(): Unit = visibleCache.clear()
+    new Lru[String, Lru[String, Unit]](VisibleCacheTables)
+  private def tableVisibleCache(table: String): Lru[String, Unit] =
+    visibleCache.getOrElseUpdate(table,
+      new Lru[String, Unit](VisibleCachePerTable))
+  private[ops] def visibleTableCount: Int = visibleCache.size
   private[ops] def visibleCacheSize(spark: SparkSession, dir: String): Int = {
     val (_, root) = fsOf(spark, dir)
-    Option(visibleCache.get(new Path(root, VersionsDir).toUri.toString))
-      .map(_.size()).getOrElse(0)
+    visibleCache.get(new Path(root, VersionsDir).toUri.toString)
+      .map(_.size).getOrElse(0)
   }
 
   /** All committed versions, ascending (empty = no table). Pending
@@ -384,7 +360,7 @@ object Manifest {
           // freshness margin are cached — see visibleCache's contract
           val key = st.getPath.toUri.toString +
             s"@${st.getModificationTime}:${st.getLen}"
-          cache.containsKey(key) || {
+          cache.get(key).isDefined || {
             val v = st.getPath.getName.drop(1).toLong
             val ok =
               try pointerVisible(fs, readPointerLines(fs, root, v))
@@ -393,7 +369,7 @@ object Manifest {
               }
             if (ok && System.currentTimeMillis() - st.getModificationTime >
               VisibleFreshMillis)
-              cache.put(key, java.lang.Boolean.TRUE)
+              cache.put(key, ())
             ok
           }
         }
@@ -1231,13 +1207,7 @@ object Manifest {
     * reads plus a whole Spark `head` job for the sentinel row. The
     * pointer read itself (version → name) stays uncached — it is the
     * mutable step. Delta caches its Snapshot the same way. */
-  private val snapshotMetaCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, SnapshotMeta](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, SnapshotMeta]): Boolean =
-          size() > 64
-      })
+  private val snapshotMetaCache = new Lru[String, SnapshotMeta](64)
 
   private[graft] def snapshotMeta(spark: SparkSession, dir: String,
                                   v: Option[Long] = None): SnapshotMeta = {
@@ -1250,8 +1220,7 @@ object Manifest {
       s"version $ver at $root is a pending multi-table commit, not committed")
     val name = lines.head.trim
     val key = s"$root#$name"
-    val cached = snapshotMetaCache.get(key)
-    if (cached != null) return cached.copy(version = ver)
+    snapshotMetaCache.get(key).foreach(m => return m.copy(version = ver))
     val st = chainState(fs, root, name)
     val dirs = st.names
       .map(n => new Path(new Path(root, ManifestsDir), n).toString)
@@ -1638,9 +1607,11 @@ object Manifest {
   /** Write `df` as a fresh immutable batch and return its entries.
     * Rows are clustered by the partition column so per-file value sets
     * stay tight (one shuffle — the price of pruning on every later
-    * rewrite); stats — partition-value sets plus min/max per stat
-    * column — come from one read-back of the batch (a projection of
-    * only the needed columns), never from path names.
+    * rewrite); stats — partition-value sets, null flag, row count,
+    * min/max per stat column, bloom bitsets — and the CHECK-constraint
+    * verdicts are collected by the write job itself, in the same pass,
+    * never from path names. A batch that violates a constraint throws
+    * [[ConstraintViolationException]] before any manifest exists.
     *
     * `numFiles` (compaction's bin-packing knob) additionally spreads
     * rows WITHIN a partition value by a content-derived salt: plain
@@ -1670,34 +1641,24 @@ object Manifest {
         pmod(xxhash64(df.columns.map(col).toIndexedSeq: _*), lit(n.toLong)))
       case (None, None) => df.repartition(col(partitionCol))
     }
-    // ---- ONE-PASS write + stats (default): the per-file stats are
-    // collected DURING the write through a WriteJobStatsTracker (the
-    // Delta-log mechanism) instead of a second full read of every byte
-    // just written. The probe expressions are built through the
+    // stats are collected DURING the write through a
+    // WriteJobStatsTracker (the Delta-log mechanism), so the batch is
+    // never read back. The probe expressions are built through the
     // ordinary Column API against a dummy frame, so the analyzer
-    // resolves casts / session timezone / eval mode EXACTLY as the
-    // read-back aggregation did, then bind to row ordinals; min/max
-    // accumulate on raw values under the same interpreted ordering the
-    // Min/Max aggregates use and render through the same Cast. The
-    // read-back pass survives behind [[WriteInlineStatsKey]]=false as
-    // the parity oracle (ManifestWriteStatsSpec compares the two).
+    // resolves casts / session timezone / eval mode as any query over
+    // the batch would, then bind to row ordinals; min/max accumulate on
+    // raw values under the interpreted ordering the Min/Max aggregates
+    // use and render through Cast. ManifestWriteStatsSpec checks the
+    // result against a read-back aggregation over the written files.
     val parsed = constraints.map(parseConstraint)
-    val inline = spark.sparkContext.hadoopConfiguration
-      .getBoolean(WriteInlineStatsKey, true)
-    val trackerOpt =
-      if (!inline) None
-      else Some(new org.apache.spark.sql.GraftWriteBridge
-        .GraftBatchStatsTracker(
-          boundProbeExprs(spark, df.schema, partitionCol, statsCols,
-            bloomCols, parsed),
-          statsCols.map(c => df.schema(c).dataType),
-          bloomCols.size, BloomHashes, BloomBits, parsed.size, ValuesCap))
-    trackerOpt match {
-      case Some(tracker) =>
-        org.apache.spark.sql.GraftWriteBridge.writeParquet(
-          spark, clustered, batchDir.toString, Seq(tracker))
-      case None => clustered.write.parquet(batchDir.toString)
-    }
+    val tracker = new org.apache.spark.sql.GraftWriteBridge
+      .GraftBatchStatsTracker(
+        boundProbeExprs(spark, df.schema, partitionCol, statsCols,
+          bloomCols, parsed),
+        statsCols.map(c => df.schema(c).dataType),
+        bloomCols.size, BloomHashes, BloomBits, parsed.size, ValuesCap)
+    org.apache.spark.sql.GraftWriteBridge.writeParquet(
+      spark, clustered, batchDir.toString, Seq(tracker))
     // one LIST of the batch dir serves both the empty-write guard and
     // every entry's byte size (a per-entry getFileStatus is O(files)
     // driver RPCs). An all-empty batch (a merge that nets to nothing,
@@ -1710,122 +1671,19 @@ object Manifest {
         !st.getPath.getName.startsWith("."))
       .map(st => st.getPath.getName -> st.getLen).toMap
     if (partLen.isEmpty) { fs.delete(batchDir, true); return Seq.empty }
-    val ddl = nullableDdl(df.schema)
-
-    trackerOpt.foreach { tracker =>
-      return entriesFromTracker(spark, fs, batchDir, tracker.results, df,
-        partitionCol, statsCols, bloomCols, parsed, partLen, ddl)
-    }
-    val rootUri = batchDir.toUri.getPath // file-scheme-free for relativizing
-    // TIMESTAMP stats are stored as epoch-micros strings, NOT the
-    // session-timezone cast-to-string rendering: a reader session with
-    // a different spark.sql.session.timeZone would otherwise compare
-    // its literals against another zone's wall-clock strings and prune
-    // files that contain matching rows. Micros are zone-free; the
-    // probe side converts its literals the same way (renderedTs).
-    def statRender(agg: org.apache.spark.sql.Column, c: String) =
-      df.schema(c).dataType match {
-        case TimestampType => unix_micros(agg).cast("string")
-        case _ => agg.cast("string")
-      }
-    val statMins = statsCols.map(c => statRender(min(col(c)), c))
-    val statMaxs = statsCols.map(c => statRender(max(col(c)), c))
-    val statAggs =
-      if (statsCols.isEmpty)
-        Seq(typedLit(Seq.empty[String]).as("stat_mins"),
-          typedLit(Seq.empty[String]).as("stat_maxs"))
-      else Seq(array(statMins: _*).as("stat_mins"),
-        array(statMaxs: _*).as("stat_maxs"))
-    // per-file bloom bit positions (k seeded hashes per value), set-
-    // collected in the SAME read-back pass as the other stats; each set
-    // is bounded by BloomBits, so driver memory stays O(batch files)
-    val bloomAggs = bloomCols.flatMap(c => (0 until BloomHashes).map(i =>
-      collect_set(when(col(c).isNotNull, bloomPosition(col(c), i)))
-        .as(s"bloom_${c}_$i")))
-    // CHECK constraints ride the SAME read-back pass (zero extra
-    // scans): SQL-standard semantics — a row violates when the
-    // expression is FALSE, null/UNKNOWN passes
-    val violAggs = parsed.zipWithIndex.map { case ((_, sql), i) =>
-      sum(when(!coalesce(expr(sql), lit(true)), 1L).otherwise(0L))
-        .as(s"viol_$i")
-    }
-    val aggList = Seq(
-      slice(sort_array(collect_set(col(partitionCol).cast("string"))),
-        1, ValuesCap + 1).as("values"),
-      max(col(partitionCol).isNull.cast("int")).as("has_null"),
-      count(lit(1)).as("rows")) ++ statAggs ++ bloomAggs ++ violAggs
-    val stats = spark.read
-      .schema(DataType.fromDDL(ddl).asInstanceOf[StructType])
-      .parquet(batchDir.toString)
-      .groupBy(input_file_name().as("file"))
-      .agg(aggList.head, aggList.tail: _*)
-      .collect()
-    // rows can be zero with part files present (a single empty part
-    // from a coalesced empty shuffle): same empty-batch contract
-    if (stats.isEmpty) { fs.delete(batchDir, true); return Seq.empty }
-    parsed.zipWithIndex.foreach { case ((name, sql), i) =>
-      val viol = stats.map(_.getAs[Long](s"viol_$i")).sum
-      // throwing here aborts BEFORE any manifest/pointer exists: the
-      // staged batch is orphan garbage, the table is untouched
-      if (viol > 0) throw ConstraintViolationException(name, sql, viol)
-    }
-    def relOf(r: org.apache.spark.sql.Row): String = {
-      val fileUri = new Path(r.getString(0)).toUri.getPath
-      require(fileUri.startsWith(rootUri), s"unexpected file path $fileUri")
-      s"$DataDir/${batchDir.getName}${fileUri.stripPrefix(rootUri)}"
-    }
-    if (bloomCols.nonEmpty) {
-      val bloomRows = stats.flatMap { r =>
-        val rel = relOf(r)
-        bloomCols.zipWithIndex.map { case (c, ci) =>
-          val bits = new java.util.BitSet(BloomBits)
-          (0 until BloomHashes).foreach { i =>
-            r.getSeq[Long](6 + ci * BloomHashes + i)
-              .foreach(p => bits.set(p.toInt))
-          }
-          val words = bits.toLongArray
-          BloomEntry(rel, c,
-            words.toSeq.padTo(BloomBits / 64, 0L))
-        }
-      }.toSeq
-      // driver-resident rows (O(batch files)): single-part local write,
-      // no Spark job — same rationale as [[writeEntriesLocal]]
-      val bEnc = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(
-        org.apache.spark.sql.Encoders.product[BloomEntry]
-          .asInstanceOf[org.apache.spark.sql.catalyst.encoders
-            .AgnosticEncoder[BloomEntry]])
-      val bSer = bEnc.createSerializer()
-      val bDir = new Path(batchDir, BloomDir)
-      fs.mkdirs(bDir)
-      org.apache.spark.sql.GraftParquetBridge.writeLocalParquet(
-        spark, bEnc.schema,
-        bloomRows.iterator.map(bSer(_)),
-        new Path(bDir, s"part-00000-${UUID.randomUUID()}.parquet").toString)
-    }
-    stats.map { r =>
-      val rel = relOf(r)
-      val vals = r.getSeq[String](1)
-      ManifestEntry(rel,
-        values = vals.take(ValuesCap),
-        has_null = r.getInt(2) == 1,
-        overflow = vals.length > ValuesCap,
-        rows = r.getLong(3),
-        bytes = partLen(rel.substring(rel.lastIndexOf('/') + 1)),
-        schema_ddl = ddl, // stripped to the sentinel by writeManifest
-        stat_cols = Seq.empty,
-        stat_mins = r.getSeq[String](4),
-        stat_maxs = r.getSeq[String](5),
-        bloom_cols = Seq.empty)
-    }.toSeq
+    entriesFromTracker(spark, fs, batchDir, tracker.results, df,
+      partitionCol, statsCols, bloomCols, parsed, partLen,
+      nullableDdl(df.schema))
   }
 
   /** Probe expressions for the one-pass write stats, in the layout
     * [[org.apache.spark.sql.GraftWriteBridge.GraftBatchStatsTracker]]
     * expects: partition value cast to string, raw stat columns,
     * nullable bloom bit positions, constraint-violation indicators —
-    * analyzer-resolved over a dummy frame (same casts/timezone/eval
-    * mode as the former read-back aggregation), bound to schema
-    * ordinals. */
+    * analyzer-resolved over a dummy frame (the casts/timezone/eval
+    * mode of any query over `schema`), bound to schema ordinals. A
+    * row violates a constraint when it evaluates FALSE; null/UNKNOWN
+    * passes (SQL-standard CHECK). */
   private def boundProbeExprs(spark: SparkSession, schema: StructType,
                               partitionCol: String, statsCols: Seq[String],
                               bloomCols: Seq[String],
@@ -1861,10 +1719,14 @@ object Manifest {
     })
   }
 
-  /** Render one raw min/max value the way the read-back aggregation
-    * did: TIMESTAMP as its zone-free epoch-micros string
-    * (`unix_micros(...).cast("string")`), everything else through the
-    * same session-configured `Cast` to string. */
+  /** Render one raw min/max value as its stored stat string:
+    * TIMESTAMP as its zone-free epoch-micros string (what
+    * `unix_micros(...).cast("string")` gives), everything else through
+    * the session-configured `Cast` to string. Micros, not the session
+    * zone's wall-clock rendering: a reader session with another
+    * `spark.sql.session.timeZone` would otherwise compare its literals
+    * against another zone's strings and prune files holding matching
+    * rows; the probe side converts its literals the same way. */
   private def renderStatValue(v: Any, dt: DataType, tz: String): String =
     if (v == null) null
     else dt match {
@@ -1877,8 +1739,9 @@ object Manifest {
     }
 
   /** Assemble [[ManifestEntry]]s (+ the bloom sidecar, + the
-    * constraint gate) from the one-pass tracker results — the exact
-    * counterpart of the legacy read-back assembly. */
+    * constraint gate) from the write job's per-file tracker results.
+    * No results (every part file empty) is an empty batch: the dir is
+    * deleted and nothing is staged. */
   private def entriesFromTracker(spark: SparkSession, fs: FileSystem,
                                  batchDir: Path,
                                  fileStats: Seq[org.apache.spark.sql
@@ -1975,9 +1838,10 @@ object Manifest {
     * entry. The one staleness window is ANOTHER driver deleting a table
     * and re-creating a clone at the same path: the stale entry then
     * fails LOUDLY (unresolvable data paths), never silently, and a
-    * driver restart clears it. */
-  private val extCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, String]]()
+    * driver restart clears it. One entry per table, LRU-bounded by
+    * [[VisibleCacheTables]]; an evicted table re-reads its `_ext` once. */
+  private val extCache = new Lru[String, Map[String, String]](VisibleCacheTables)
+  private[ops] def extCacheSize: Int = extCache.size
 
   /** batch-dir → external-root map of `root`'s table (empty for
     * ordinary tables). One small read, memoized per JVM; no Spark
@@ -1992,8 +1856,7 @@ object Manifest {
                       root: Path): Map[String, String] = {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val key = fs.makeQualified(root).toString
-    val hit = extCache.get(key)
-    if (hit != null) return hit
+    extCache.get(key).foreach(hit => return hit)
     val out = extRootsUncached(spark, fs, root)
     extCache.put(key, out)
     out
@@ -2719,15 +2582,6 @@ object Manifest {
     }
   }
 
-  /** Driver-LOCAL deletion-vector decode when the sidecar dirs sit
-    * under the SAME budget that gates every other driver-resident
-    * metadata venue ([[localReadBudget]]) — the round-17 batch-4 move
-    * applied to DV sidecars: a MoR lifecycle resolved its (usually
-    * few-KB) vectors through distributed scans several times per op
-    * (touched-path discovery, the mask relation of every read). Zero
-    * Spark jobs under the budget; `None` past it (or on any unexpected
-    * physical shape), sending the caller to the distributed read
-    * unchanged. Parity is spec-pinned (DvLocalReadSpec). */
   /** Bounded per-JVM memo of DECODED DV sidecars, keyed by (root, dv
     * dir name). Sound for the same reason as [[snapshotMetaCache]]: a
     * committed `d-<uuid>` dir is immutable ([[writeDv]] stages a fresh
@@ -2738,28 +2592,9 @@ object Manifest {
     * serial driver parquet decode — measured ~0.25 s per man_upsert_mor
     * at sf0.1. Evicts LRU past 64 dirs or 2²⁰ total cached rows (~150 MB
     * worst-case heap); oversized vectors simply never enter. */
-  private val dvDecodeCache =
-    new java.util.LinkedHashMap[String, (Long, Vector[DvEntry])](32, 0.75f, true)
-  private var dvDecodeCachedRows = 0L
   private val DvCacheMaxRows = 1L << 20
-
-  private def dvCacheGet(key: String): Option[(Long, Vector[DvEntry])] =
-    dvDecodeCache.synchronized(Option(dvDecodeCache.get(key)))
-
-  private def dvCachePut(key: String, bytes: Long,
-                         v: Vector[DvEntry]): Unit =
-    dvDecodeCache.synchronized {
-      if (v.size > DvCacheMaxRows || dvDecodeCache.containsKey(key)) return
-      dvDecodeCache.put(key, (bytes, v))
-      dvDecodeCachedRows += v.size
-      val it = dvDecodeCache.entrySet().iterator()
-      while ((dvDecodeCache.size > 64 ||
-        dvDecodeCachedRows > DvCacheMaxRows) && it.hasNext) {
-        val e = it.next()
-        dvDecodeCachedRows -= e.getValue._2.size
-        it.remove()
-      }
-    }
+  private val dvDecodeCache = new Lru[String, (Long, Vector[DvEntry])](
+    64, maxWeight = DvCacheMaxRows, weight = _._2.size.toLong)
 
   /** One DV dir's on-disk bytes + decoded rows, memoized; None when the
     * physical shape is unexpected (caller falls back to distributed). */
@@ -2768,7 +2603,7 @@ object Manifest {
                           root: Path, d: String)
       : Option[(Long, Vector[DvEntry])] = {
     val key = s"$root#$d"
-    dvCacheGet(key).orElse {
+    dvDecodeCache.get(key).orElse {
       val files = fs.listStatus(new Path(new Path(root, DvDir), d))
         .filter(st => st.isFile && st.getLen > 0 &&
           !st.getPath.getName.startsWith("_") &&
@@ -2802,7 +2637,7 @@ object Manifest {
       if (!ok) None
       else {
         val v = (bytes, out.result())
-        dvCachePut(key, v._1, v._2)
+        dvDecodeCache.put(key, v)
         Some(v)
       }
     }
@@ -2817,15 +2652,22 @@ object Manifest {
     * vectorized reader + parallelism is faster at any scale. Measured:
     * a 128 MB-budget gate regressed man_upsert_mor 2.83→3.08 s at sf0.1
     * (its 80-220 KB vectors decode ~0.2 s serial). */
-  private[graft] val DvLocalMaxBytesKey = "graft.dv.localMaxBytes"
-  private val DvLocalMaxBytesDefault = 64L << 10
+  private val DvLocalMaxBytes = 64L << 10
 
+  /** Driver-LOCAL deletion-vector decode when the sidecar dirs sit
+    * under the SAME budget that gates every other driver-resident
+    * metadata venue ([[localReadBudget]]) — the round-17 batch-4 move
+    * applied to DV sidecars: a MoR lifecycle resolved its (usually
+    * few-KB) vectors through distributed scans several times per op
+    * (touched-path discovery, the mask relation of every read). Zero
+    * Spark jobs under the budget; `None` past it (or on any unexpected
+    * physical shape), sending the caller to the distributed read
+    * unchanged. Parity is spec-pinned (DvLocalReadSpec). */
   private def dvLocalEntries(spark: SparkSession, root: Path,
                              dvDirs: Seq[String]): Option[Seq[DvEntry]] =
     try {
       val conf = spark.sparkContext.hadoopConfiguration
-      val budget = math.min(localReadBudget(spark),
-        conf.getLong(DvLocalMaxBytesKey, DvLocalMaxBytesDefault))
+      val budget = math.min(localReadBudget(spark), DvLocalMaxBytes)
       if (budget < 0L) None // pinned distributed
       else {
         val fs = root.getFileSystem(conf)
@@ -3846,20 +3688,18 @@ object Manifest {
   }
 
   /** A LINKED append writes only the batch's entries plus a base
-    * pointer — O(batch), not O(table). Eligible when (a) linking is on
-    * ([[AppendLinkedKey]]); (b) the chain has headroom
-    * ([[AppendMaxChainKey]] — at the cap the append compacts, which
-    * re-roots the chain); and (c) the parent chain's PHYSICAL parquet
+    * pointer — O(batch), not O(table). Eligible when (a) the chain has
+    * headroom ([[AppendMaxChainKey]] — at the cap the append compacts,
+    * which re-roots the chain); and (b) the parent chain's PHYSICAL parquet
     * schema matches this writer's [[ManifestEntry]] encoder exactly —
     * a chain must read as ONE uniform relation, and mixing an
     * old-library manifest (missing a column) with a new part would
     * leave schema inference to whichever footer Spark samples. Guard
-    * (c) reads one footer; all links passed it inductively at their
+    * (b) reads one footer; all links passed it inductively at their
     * own write, so checking the chain ROOT covers the chain. */
   private def linkedAppendEligible(spark: SparkSession, fs: FileSystem,
                                    meta: SnapshotMeta): Boolean = {
     val conf = spark.sparkContext.hadoopConfiguration
-    if (!conf.getBoolean(AppendLinkedKey, true)) return false
     if (meta.manifestDirs.length >=
       conf.getLong(AppendMaxChainKey, AppendMaxChainDefault)) return false
     val want = org.apache.spark.sql.Encoders.product[ManifestEntry].schema

@@ -326,9 +326,9 @@ case class GraftInsertCommand(name: String, dir: String, pCol: String,
   * [[Manifest.vacuumOrphans]] (age floor from
   * `graft.vacuum.staleMillis`, default 1 h — set 0 only in
   * single-writer maintenance windows). Without RETAIN the statement
-  * keeps `graft.sql.vacuum.defaultKeepVersions` (default 10) versions
-  * — dropping ALL history in one bare statement was judged too sharp;
-  * say `RETAIN 1 VERSIONS` explicitly for that. */
+  * keeps [[GraftSqlDml.VacuumDefaultKeep]] (10) versions — dropping
+  * ALL history in one bare statement was judged too sharp; say
+  * `RETAIN 1 VERSIONS` explicitly for that. */
 case class GraftVacuumCommand(name: String, dir: String,
                               keepVersions: Int, force: Boolean,
                               dryRun: Boolean = false)
@@ -648,7 +648,6 @@ object GraftSqlDml {
     spark.conf.getOption("graft.sql.dml.mor").exists(_.toBoolean)
 
   /** Bare-`VACUUM` retention when no RETAIN clause is given. */
-  val VacuumDefaultKeepKey = "graft.sql.vacuum.defaultKeepVersions"
   val VacuumDefaultKeep = 10
 
   // ---- extension statements Spark's grammar lacks ----
@@ -697,9 +696,7 @@ object GraftSqlDml {
       case VacuumRe(name, retain, dry, force) =>
         val spark = SparkSession.active
         val ref = resolveOrThrow(spark, name, "VACUUM")
-        val keep = Option(retain).map(_.toInt).getOrElse(
-          spark.conf.getOption(VacuumDefaultKeepKey).map(_.toInt)
-            .getOrElse(VacuumDefaultKeep))
+        val keep = Option(retain).map(_.toInt).getOrElse(VacuumDefaultKeep)
         Some(GraftVacuumCommand(name, ref.dir, keep, force != null,
           dryRun = dry != null))
       case OptimizeRe(name, incr, where, curve, cols) =>

@@ -2,9 +2,23 @@ package graft.io
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+
+/** Local fs whose `rename` reports failure without moving anything —
+  * the HDFS answer when the destination already exists. */
+class NoRenameFileSystem extends RawLocalFileSystem {
+  override def getScheme: String = "norenamefs"
+  override def getUri: java.net.URI = java.net.URI.create("norenamefs:///")
+  override def rename(src: Path, dst: Path): Boolean = false
+  // plain statuses: the local ones load their permissions through
+  // java.io.File, which rejects any scheme but `file`
+  override def listStatus(f: Path): Array[FileStatus] =
+    super.listStatus(f).map(st => new FileStatus(st.getLen, st.isDirectory,
+      1, st.getBlockSize, st.getModificationTime, st.getPath))
+}
 
 class SinksSpec extends SparkSpec {
   import spark.implicits._
@@ -113,6 +127,20 @@ class SinksSpec extends SparkSpec {
     assert(moved.nonEmpty)
     assert(Sources.present(spark, s"$dir/archive/t0/orders/*"))
     assert(!Sources.present(spark, s"$dir/raw/orders/*.csv"))
+  }
+
+  test("archive throws when a move fails and leaves the raw file in place") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.norenamefs.impl", classOf[NoRenameFileSystem].getName)
+    val dir = Files.createTempDirectory("graft-archive-fail").toString
+    val raw = java.nio.file.Paths.get(dir, "raw", "orders", "part-0.csv")
+    Files.createDirectories(raw.getParent)
+    Files.write(raw, "id,v\n1,a\n".getBytes("UTF-8"))
+    val e = intercept[java.io.IOException] {
+      Sinks.archive(spark, s"norenamefs://$dir/raw", s"norenamefs://$dir/archive", "t0")
+    }
+    assert(e.getMessage.contains("part-0.csv") && e.getMessage.contains("archive/t0"))
+    assert(Files.exists(raw), "a failed move must leave the raw file where it was")
   }
 
   test("jsonl sink/source round-trip preserves rows and types") {

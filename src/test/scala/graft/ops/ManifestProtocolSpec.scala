@@ -243,9 +243,6 @@ class ManifestProtocolSpec extends SparkSpec {
   test("outer visibility cache evicts whole least-recently-used TABLES") {
     val saved = Manifest.VisibleCacheTables
     Manifest.VisibleCacheTables = 4
-    // LinkedHashMap eviction removes ONE eldest per insert: the bound
-    // only holds from an empty start, so drop earlier suites' tables
-    Manifest.clearVisibleCacheForTest()
     try {
       val roots = (1 to 7).map(i => s"${newRoot()}/t$i")
       roots.foreach { d =>
@@ -255,9 +252,13 @@ class ManifestProtocolSpec extends SparkSpec {
         val vp = new Path(d, "_versions/v00000001")
         fs.setTimes(vp, System.currentTimeMillis() - 60000, -1)
         Manifest.versions(spark, d)
+        Manifest.read(spark, d) // plans the read: memoizes the table's `_ext`
       }
       assert(Manifest.visibleTableCount <= 4,
         s"outer table cache must be bounded, got ${Manifest.visibleTableCount}")
+      // the per-table `_ext` memo shares the bound
+      assert(Manifest.extCacheSize <= 4,
+        s"_ext memo must be bounded, got ${Manifest.extCacheSize}")
       // an evicted table is merely re-verified, never wrong
       assert(Manifest.versions(spark, roots.head) == Seq(1L))
     } finally Manifest.VisibleCacheTables = saved

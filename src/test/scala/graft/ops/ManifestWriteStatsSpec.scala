@@ -3,22 +3,25 @@ package graft.ops
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Parity of the ONE-PASS write-stats path (stats collected during the
-  * batch write via the WriteJobStatsTracker hook) against the legacy
-  * read-back aggregation it replaced: both modes must produce
-  * bit-identical manifest entries — partition value sets (sorted,
-  * capped, overflow flag), null flags, row counts, min/max renderings
-  * (incl. the zone-free epoch-micros TIMESTAMP form), bloom bitsets,
-  * and CHECK-constraint enforcement. */
+/** The write-time stats of a batch (collected during the write via the
+  * WriteJobStatsTracker hook) against [[ReadBackStats]], a read-back
+  * aggregation over the same data files: the manifest entries must be
+  * identical — partition value sets (sorted, capped, overflow flag),
+  * null flags, row counts, byte sizes, min/max renderings (incl. the
+  * zone-free epoch-micros TIMESTAMP form) — as must the bloom bitsets
+  * and the CHECK-constraint violation counts. */
 class ManifestWriteStatsSpec extends SparkSpec {
   import spark.implicits._
 
   private def newDir(tag: String) =
     Files.createTempDirectory(s"graft-wstats-$tag").toString + "/tbl"
+
+  private def hconf = spark.sparkContext.hadoopConfiguration
 
   /** A frame that exercises every stats feature: >64 distinct partition
     * values (overflow), a null partition value (has_null), null stat
@@ -35,83 +38,74 @@ class ManifestWriteStatsSpec extends SparkSpec {
         .when($"id" % 7 === 0, concat(lit("pé-"), $"id" % 80))
         .otherwise(concat(lit("p-"), $"id" % 80)).as("p"))
 
-  private def withInline[A](on: Boolean)(f: => A): A = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val old = conf.get(Manifest.WriteInlineStatsKey)
-    conf.setBoolean(Manifest.WriteInlineStatsKey, on)
-    try f
-    finally if (old == null) conf.unset(Manifest.WriteInlineStatsKey)
-    else conf.set(Manifest.WriteInlineStatsKey, old)
+  /** The table's batch dirs (`data/b-<uuid>`). */
+  private def batchDirs(dir: String): Seq[Path] = {
+    val data = new Path(dir, "data")
+    data.getFileSystem(hconf).listStatus(data).map(_.getPath).toSeq
   }
 
-  /** Entries keyed by part index (file names differ only in job UUID),
-    * with the batch-dir-dependent path dropped. */
-  private def entryMap(dir: String) = {
+  /** Assert the table's single batch carries exactly the read-back
+    * stats: entries field for field, bloom bitsets per file and column. */
+  private def assertMatchesReadBack(dir: String, statsCols: Seq[String],
+                                    bloomCols: Seq[String]): Unit = {
     val meta = Manifest.snapshotMeta(spark, dir)
-    Manifest.entriesDataset(spark, meta).collect().toSeq.map { e =>
-      val part = e.path.split('/').last.split('-')(1).toInt
-      part -> e.copy(path = "")
-    }.toMap
+    val Seq(batch) = batchDirs(dir)
+    val want = ReadBackStats(spark, batch, meta.ddl, "p", statsCols, bloomCols)
+    val got = Manifest.entriesDataset(spark, meta).collect().toSeq
+      .map(e => e.path -> e).toMap
+    assert(got.keySet == want.entries.keySet)
+    got.keySet.toSeq.sorted.foreach { path =>
+      assert(got(path) == want.entries(path), s"entry mismatch for $path:\n" +
+        s"  write-time: ${got(path)}\n  read-back:  ${want.entries(path)}")
+    }
+    if (bloomCols.nonEmpty) {
+      val blooms = spark.read.parquet(new Path(batch, "_bloom").toString)
+        .as[BloomEntry].collect().map(b => (b.path, b.column) -> b.bits).toMap
+      assert(blooms == want.blooms)
+    }
   }
 
-  test("inline write stats == legacy read-back stats, field for field") {
-    val dirA = newDir("inline"); val dirB = newDir("legacy")
-    withInline(true)(Manifest.create(spark, dirA, messy, "p",
-      statsCols = Seq("v", "ts", "k"), bloomCols = Seq("k")))
-    withInline(false)(Manifest.create(spark, dirB, messy, "p",
-      statsCols = Seq("v", "ts", "k"), bloomCols = Seq("k")))
-    val (a, b) = (entryMap(dirA), entryMap(dirB))
-    assert(a.keySet == b.keySet)
-    a.keySet.toSeq.sorted.foreach { part =>
-      assert(a(part) == b(part), s"entry mismatch for part $part:\n" +
-        s"  inline: ${a(part)}\n  legacy: ${b(part)}")
-    }
-    // the bloom sidecars must carry identical bitsets per part file
-    def bloomMap(dir: String) = {
-      val batch = new org.apache.hadoop.fs.Path(dir, "data")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val dataDir = new org.apache.hadoop.fs.Path(dir, "data")
-      val b = batch.listStatus(dataDir).head.getPath
-      spark.read.parquet(new org.apache.hadoop.fs.Path(b, "_bloom").toString)
-        .collect().map(r => (r.getString(0).split('/').last.split('-')(1).toInt,
-          r.getString(1)) -> r.getSeq[Long](2)).toMap
-    }
-    assert(bloomMap(dirA) == bloomMap(dirB))
-    // and the two tables answer identically
-    assert(Manifest.read(spark, dirA).orderBy($"k").collect().toSeq ==
-      Manifest.read(spark, dirB).orderBy($"k").collect().toSeq)
+  test("write-time stats == read-back stats, field for field") {
+    val dir = newDir("fields")
+    Manifest.create(spark, dir, messy, "p",
+      statsCols = Seq("v", "ts", "k"), bloomCols = Seq("k"))
+    assertMatchesReadBack(dir, Seq("v", "ts", "k"), Seq("k"))
+    // and the table answers with exactly the rows written
+    assert(Manifest.read(spark, dir).orderBy($"k").collect().toSeq ==
+      messy.orderBy($"k").collect().toSeq)
   }
 
-  test("stats-pruned reads agree between the two write modes") {
-    val dirA = newDir("prune-i"); val dirB = newDir("prune-l")
-    withInline(true)(Manifest.create(spark, dirA, messy, "p",
-      statsCols = Seq("ts", "v")))
-    withInline(false)(Manifest.create(spark, dirB, messy, "p",
-      statsCols = Seq("ts", "v")))
+  test("stats-pruned reads return exactly the matching rows") {
+    val dir = newDir("prune")
+    Manifest.create(spark, dir, messy, "p", statsCols = Seq("ts", "v"))
+    assertMatchesReadBack(dir, Seq("ts", "v"), Nil)
     def cond = ($"ts" >= Timestamp.valueOf("2017-07-14 02:40:00") &&
       $"v" < 600.0)
-    val qa = graft.plans.ManifestScan.scan(spark, dirA, Some("p"))
+    val pruned = graft.plans.ManifestScan.scan(spark, dir, Some("p"))
       .filter(cond).orderBy($"k").collect().toSeq
-    val qb = graft.plans.ManifestScan.scan(spark, dirB, Some("p"))
-      .filter(cond).orderBy($"k").collect().toSeq
-    assert(qa == qb && qa.nonEmpty)
+    assert(pruned.nonEmpty &&
+      pruned == messy.filter(cond).orderBy($"k").collect().toSeq)
   }
 
-  test("constraint violations abort identically in both modes") {
-    Seq(true, false).foreach { inline =>
-      val dir = newDir(s"viol-$inline")
-      withInline(inline) {
-        Manifest.create(spark, dir, messy.filter($"v" > 0), "p")
-        Manifest.addConstraint(spark, dir, "v_pos", "v > 0")
-        val e = intercept[Manifest.ConstraintViolationException] {
-          Manifest.append(spark, dir,
-            Seq((9001L, -1.0, Timestamp.valueOf("2020-01-01 00:00:00"), "p-1"),
-              (9002L, 2.0, Timestamp.valueOf("2020-01-01 00:00:00"), "p-1"))
-              .toDF("k", "v", "ts", "p"), "p")
-        }
-        assert(e.name == "v_pos" && e.rows == 1)
-        assert(Manifest.versions(spark, dir).size == 2) // create + constraint
-      }
+  test("constraint violations abort with the read-back violation count") {
+    val dir = newDir("viol")
+    Manifest.create(spark, dir, messy.filter($"v" > 0), "p")
+    Manifest.addConstraint(spark, dir, "v_pos", "v > 0")
+    val Seq(live) = batchDirs(dir)
+    val e = intercept[Manifest.ConstraintViolationException] {
+      Manifest.append(spark, dir,
+        Seq((9001L, -1.0, Timestamp.valueOf("2020-01-01 00:00:00"), "p-1"),
+          (9002L, 2.0, Timestamp.valueOf("2020-01-01 00:00:00"), "p-1"),
+          (9003L, -3.0, Timestamp.valueOf("2020-01-01 00:00:00"), null))
+          .toDF("k", "v", "ts", "p"), "p")
     }
+    assert(e.name == "v_pos" && e.rows == 2)
+    assert(Manifest.versions(spark, dir).size == 2) // create + constraint
+    // the aborted batch stays behind as an orphan: recount it
+    val Seq(staged) = batchDirs(dir).filterNot(_ == live)
+    val want = ReadBackStats(spark, staged,
+      Manifest.snapshotMeta(spark, dir).ddl, "p", Nil,
+      constraints = Seq("v > 0"))
+    assert(want.violations == Seq(e.rows))
   }
 }

@@ -161,7 +161,7 @@ class SqlDmlSpec extends SparkSpec {
     metrics("DELETE FROM sqlvac_t WHERE p = 0") // retires whole files
     spark.conf.set("graft.vacuum.staleMillis", "0")
     try {
-      // bare VACUUM keeps graft.sql.vacuum.defaultKeepVersions (10):
+      // bare VACUUM keeps GraftSqlDml.VacuumDefaultKeep (10) versions:
       // with only 5 versions here it must retain ALL history — dropping
       // every old version on an unqualified statement was judged too
       // sharp. (True orphans — files no retained manifest ever listed —
