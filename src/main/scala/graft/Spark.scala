@@ -4,7 +4,16 @@ import org.apache.spark.sql.SparkSession
 
 /** One place for session construction so Verify, Bench, and tests agree on
   * the configs that affect semantics (UTC, nanos handling) and local-mode
-  * sizing (shuffle partitions = cores, not the 200 default). */
+  * sizing (shuffle partitions = cores, not the 200 default).
+  *
+  * It also binds `file:` to [[graft.io.NioLocalFileSystem]] (the
+  * `FileSystem` API) and [[graft.io.NioLocalFs]] (the `FileContext` API,
+  * which streaming checkpoints use). Without the native hadoop library,
+  * the stock local filesystem runs `chmod` as a child process on every
+  * `mkdirs` and file `create`, and `readlink` twice per `FileContext`
+  * rename; these do the same in-process.
+  * Hadoop caches one `FileSystem` per scheme and user, so a `file:`
+  * filesystem opened before the first session keeps its class. */
 object Spark {
   def session(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
               appName: String = "graft"): SparkSession = {
@@ -38,6 +47,8 @@ object Spark {
       .config("spark.sql.warehouse.dir",
         sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.NioLocalFs].getName)
       .getOrCreate()
   }
 }

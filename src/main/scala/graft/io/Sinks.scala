@@ -277,9 +277,9 @@ object Sinks {
     val conf = spark.sparkContext.hadoopConfiguration
     val path = new Path(dir)
     val fs = path.getFileSystem(conf)
-    val bytes = listRecursive(fs, path)
-      .filter(_.getName.endsWith(".parquet"))
-      .map(p => fs.getFileStatus(p).getLen).sum
+    val bytes = NioLocalFileSystem.listFilesRecursive(fs, path)
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map(_.getLen).sum
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     val tmp = new Path(path.getParent, path.getName + "_compacting")
     spark.read.parquet(dir).coalesce(nFiles)
@@ -328,7 +328,7 @@ object Sinks {
     // qualify so URI relativization sees one scheme on both sides
     val src = fs.makeQualified(new Path(srcDir))
     if (!fs.exists(src)) return Seq.empty
-    val files = listRecursive(fs, src)
+    val files = NioLocalFileSystem.listFilesRecursive(fs, src).map(_.getPath)
     val moved = files.map { f =>
       val rel = src.toUri.relativize(fs.makeQualified(f).toUri).getPath
       val dst = new Path(s"$archiveBase/$ts/$rel")
@@ -337,12 +337,5 @@ object Sinks {
       dst.toString
     }
     moved
-  }
-
-  private def listRecursive(fs: FileSystem, dir: Path): Seq[Path] = {
-    val it = fs.listFiles(dir, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (it.hasNext) buf += it.next().getPath
-    buf.toSeq
   }
 }

@@ -7172,10 +7172,8 @@ object Manifest {
       // TWO passes: first learn which batches are possibly mid-stage,
       // THEN delete — so an old file never falls to a doomed-list built
       // before its sibling young file marked the batch
-      val it = fs.listFiles(dataRoot, true)
       val doomed = scala.collection.mutable.ArrayBuffer[(Path, String, Long)]()
-      while (it.hasNext) {
-        val st = it.next()
+      graft.io.NioLocalFileSystem.listFilesRecursive(fs, dataRoot).foreach { st =>
         val rel = s"$DataDir${st.getPath.toUri.getPath.stripPrefix(dataRoot.toUri.getPath)}"
         val parts = rel.split('/')
         if (st.isFile && st.getModificationTime >= cutoff)

@@ -31,15 +31,19 @@ object Validate {
     * `Task_1/task_1.py:130-131` — a hash-set `isin`). LEFT SEMI keeps
     * exactly the child rows whose key exists in `valid`; Catalyst/AQE pick
     * broadcast vs shuffled-hash by the size of `valid`, which is the
-    * scale-out generalization of the reference's in-memory set. */
+    * scale-out generalization of the reference's in-memory set. The key
+    * side is not deduplicated: a semi join emits each left row at most
+    * once however often its key repeats, and a `distinct` would cost an
+    * aggregate (and a Spark job) of its own. */
   def semiJoinRI(valid: DataFrame, key: String)(df: DataFrame): DataFrame =
-    df.join(valid.select(key).distinct(), Seq(key), "left_semi")
+    df.join(valid.select(key), Seq(key), "left_semi")
 
   /** The complement — orphans that fail referential integrity (not in the
     * reference, which silently drops them; exposed for data-quality
-    * reporting). */
+    * reporting). Like [[semiJoinRI]], an anti join never duplicates left
+    * rows, so the key side is not deduplicated. */
   def antiJoinOrphans(valid: DataFrame, key: String)(df: DataFrame): DataFrame =
-    df.join(valid.select(key).distinct(), Seq(key), "left_anti")
+    df.join(valid.select(key), Seq(key), "left_anti")
 
   /** Timestamp → date derivation, null-preserving (`prj_derive_dates`,
     * reference `Task_1/task_1.py:135-136` `pd.to_datetime(...).dt.date`). */

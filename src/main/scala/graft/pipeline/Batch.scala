@@ -18,12 +18,12 @@ import graft.schema.Schemas
   *    and is formatted ISO only at the KV boundary;
   *  - the KV sink writes partition-parallel (`Sinks.kvUpsert`) instead of
   *    a driver row loop;
-  *  - each KPI plan (read → join → aggregate) runs once per batch: its
-  *    result is collected to the driver and both sinks read that copy;
+  *  - the KPI plan (read → join → one aggregate for both tables) runs
+  *    once per batch: its result is collected to the driver and every
+  *    sink reads that copy;
   *  - actions that do not depend on each other run concurrently on the
-  *    driver (the three validated-layer writes, the two KPI collects,
-  *    the four sink writes), and the archive runs last, after every sink
-  *    has finished.
+  *    driver (the three validated-layer writes, the four sink writes),
+  *    and the archive runs last, after every sink has finished.
   */
 object Batch {
 
@@ -59,21 +59,20 @@ object Batch {
     orders = Sources.parquet(spark, s"$validatedDir/orders"),
     items = Sources.parquet(spark, s"$validatedDir/order_items"))
 
-  /** Task 2 — transformation (`Task_2/task_2.py:57-139`): both KPI plans
-    * run once, concurrently, and come back as driver-resident frames of
-    * one partition each, so every sink reads the computed rows instead of
-    * re-running the plan, and a CSV sink writes exactly one part. Safe to
-    * collect: a KPI table is bounded by categories × days, never by fact
-    * rows. */
+  /** Task 2 — transformation (`Task_2/task_2.py:57-139`): the one KPI
+    * aggregate that feeds both tables ([[Transform.kpiAggregate]]) runs
+    * once and comes back as a driver-resident frame of one partition;
+    * both KPI tables are projections of it, so every sink reads the
+    * computed rows instead of re-running the plan, and a CSV sink writes
+    * exactly one part. Safe to collect: the aggregate is bounded by
+    * categories × days, never by fact rows. */
   def transform(v: Validated): (DataFrame, DataFrame) = {
-    val (cat, ord) = Transform.kpis(v.items, v.orders, v.products)
-    val Seq(catRows, ordRows) = concurrently(() => onDriver(cat), () => onDriver(ord))
-    (catRows, ordRows)
-  }
-
-  private def onDriver(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    val agg = Transform.kpiAggregate(Transform.merged(v.items, v.orders, v.products))
+    val rows = agg.sparkSession
+      .createDataFrame(java.util.Arrays.asList(agg.collect(): _*), agg.schema)
       .coalesce(1)
+    (Transform.catKpi(rows), Transform.orderKpi(rows))
+  }
 
   /** Task 2 sinks (`Task_2/task_2.py:144-235`): KV upserts keyed like the
     * DynamoDB tables and timestamped CSVs under `processed/<ts>/`, all four
@@ -124,12 +123,11 @@ object Batch {
     * [[Streaming.enforceBudget]] cancel, and the streaming query's own —
     * which a pooled thread would carry over from whichever run used it
     * last. The first failure is rethrown once every action has finished. */
-  private def concurrently[T](actions: (() => T)*): Seq[T] = {
-    val results = new Array[Any](actions.size)
+  private def concurrently(actions: (() => Any)*): Unit = {
     val failure = new AtomicReference[Throwable]()
     val threads = actions.zipWithIndex.map { case (action, i) =>
       val t = new Thread(() =>
-        try results(i) = action()
+        try action()
         catch { case e: Throwable => failure.compareAndSet(null, e) },
         s"graft-batch-$i")
       t.setDaemon(true)
@@ -138,6 +136,5 @@ object Batch {
     }
     threads.foreach(_.join())
     Option(failure.get).foreach(e => throw e)
-    results.toSeq.asInstanceOf[Seq[T]]
   }
 }

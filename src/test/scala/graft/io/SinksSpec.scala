@@ -2,7 +2,7 @@ package graft.io
 
 import java.nio.file.Files
 
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -13,11 +13,6 @@ class NoRenameFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "norenamefs"
   override def getUri: java.net.URI = java.net.URI.create("norenamefs:///")
   override def rename(src: Path, dst: Path): Boolean = false
-  // plain statuses: the local ones load their permissions through
-  // java.io.File, which rejects any scheme but `file`
-  override def listStatus(f: Path): Array[FileStatus] =
-    super.listStatus(f).map(st => new FileStatus(st.getLen, st.isDirectory,
-      1, st.getBlockSize, st.getModificationTime, st.getPath))
 }
 
 class SinksSpec extends SparkSpec {

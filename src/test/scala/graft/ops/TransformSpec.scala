@@ -3,13 +3,16 @@ package graft.ops
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{RawFixture, SparkSpec}
+import graft.pipeline.Batch
 import graft.schema.Schemas
 
 /** KPI semantics unit tests — the ⚠ items of SURVEY.md §2.D on a frame
   * small enough to hand-compute: item-grain rates, null-category drop,
-  * mixed-grain avg_return_rate. */
+  * mixed-grain avg_return_rate — and the one-aggregate KPI plan against
+  * the two-aggregate oracle [[KpiOracle]] on a fixture drop. */
 class TransformSpec extends SparkSpec {
   import scala.jdk.CollectionConverters._
 
@@ -59,6 +62,33 @@ class TransformSpec extends SparkSpec {
     assert(row.getAs[Double]("avg_order_value") == 35.0)
     // mixed grain: 1 returned ITEM row / 2 distinct orders = 50%
     assert(row.getAs[Double]("avg_return_rate") == 50.0)
+  }
+
+  test("kpiAggregate projections equal the two-aggregate oracle, null keys included") {
+    val raw = java.nio.file.Files.createTempDirectory("graft-kpi").toString
+    RawFixture.stage(raw)
+    val v = Batch.validate(Batch.readRaw(spark, raw))
+    val m = Transform.merged(v.items, v.orders, v.products)
+    val base = spark.createDataFrame(m.collect().toSeq.asJava, m.schema)
+    // a null category counts for order_kpi only; a null order_date is a
+    // group of its own in both tables
+    val merged = base
+      .unionByName(base.filter(col("id") <= 6)
+        .withColumn("id", col("id") + 100000)
+        .withColumn("category", lit(null).cast("string")))
+      .unionByName(base.filter(col("id") > 6 && col("id") <= 12)
+        .withColumn("id", col("id") + 200000)
+        .withColumn("order_date", lit(null).cast("date")))
+    val agg = Transform.kpiAggregate(merged)
+    Seq(("category_kpi", Transform.catKpi(agg), KpiOracle.catKpi(merged)),
+      ("order_kpi", Transform.orderKpi(agg), KpiOracle.orderKpi(merged)))
+      .foreach { case (table, got, want) =>
+        assert(got.schema == want.schema, table)
+        val (g, w) = (got.collect().map(_.toString).sorted, want.collect().map(_.toString).sorted)
+        assert(g.toSeq == w.toSeq, table)
+      }
+    assert(KpiOracle.orderKpi(merged).filter(col("order_date").isNull).count() == 1)
+    assert(KpiOracle.catKpi(merged).filter(col("order_date").isNull).count() > 0)
   }
 
   test("joinOrdersItems keeps item-side user_id unprefixed (pandas _x side)") {

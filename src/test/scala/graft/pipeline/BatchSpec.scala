@@ -18,8 +18,8 @@ import graft.schema.Schemas
 
 /** Regression guards for [[Batch.runAll]] on one fixture drop: the KV
   * tables hold the KPIs, each processed table is one CSV part holding the
-  * same rows, and the KPI plan runs once per table rather than once per
-  * sink. */
+  * same rows, and the KPI plan runs once per drop rather than once per
+  * table or per sink. */
 class BatchSpec extends SparkSpec {
   import BatchSpec.Run
 
@@ -114,9 +114,10 @@ class BatchSpec extends SparkSpec {
       }
   }
 
-  test("runAll reads validated/order_items in exactly two query executions") {
-    // one collect per KPI table; both sinks then read the collected rows
-    assert(run.itemScans == 2)
+  test("runAll reads validated/order_items in exactly one query execution") {
+    // one collect of the aggregate both KPI tables project; every sink
+    // then reads the collected rows
+    assert(run.itemScans == 1)
   }
 }
 
