@@ -3,9 +3,13 @@ package graft.io
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DateType, DecimalType, DoubleType, TimestampType}
+import org.apache.spark.sql.types.{DateType, DecimalType, DoubleType, StructField, TimestampType}
 
 /** Sink connectors (SURVEY.md §2.A).
   *
@@ -15,6 +19,11 @@ import org.apache.spark.sql.types.{DateType, DecimalType, DoubleType, TimestampT
   * slowest path in the whole program. Here the KV sink runs
   * partition-parallel via `foreachPartition`, so write throughput scales
   * with executor count instead of being a driver bottleneck.
+  *
+  * Venue rule of [[kvUpsert]] and [[csvTimestamped]]: a frame whose
+  * optimized plan is a `LocalRelation` already holds its rows on the
+  * driver, so the driver writes them and no Spark job runs; any other
+  * frame is written by the executors.
   */
 object Sinks {
 
@@ -29,11 +38,61 @@ object Sinks {
     * by the caller (driver-side batch time, formatted like the reference's
     * `yyyy-MM-dd-T-HH:mm:ss`, `Task_2/task_2.py:215`) — never
     * `current_timestamp()` inside the plan, which would be nondeterministic
-    * per-row. Returns the directory written. */
+    * per-row. Returns the directory written.
+    *
+    * A frame whose rows are on the driver (see [[Sinks]]) is written there
+    * as one part, by Spark's own CSV generator with the options [[csv]]
+    * uses, so the bytes are those an executor would write; any other
+    * frame goes through [[csv]]. */
   def csvTimestamped(df: DataFrame, base: String, name: String, ts: String): String = {
     val dir = s"$base/$ts/$name"
-    csv(df, dir)
+    driverRows(df) match {
+      case Some(rows) if df.schema.forall(f => CsvFormat.supportDataType(f.dataType)) =>
+        csvFromDriver(df, rows, dir)
+      case _ => csv(df, dir)
+    }
     dir
+  }
+
+  /** For its type check: a type Spark's CSV writer refuses goes to
+    * [[csv]], which raises Spark's own error. */
+  private val CsvFormat = new CSVFileFormat
+
+  /** The rows of `df` when its optimized plan is a `LocalRelation`:
+    * Catalyst folds projections and filters over driver-side rows into
+    * one, so such a frame's rows are on the driver already. None for any
+    * other frame. */
+  private def driverRows(df: DataFrame): Option[Seq[InternalRow]] =
+    df.queryExecution.optimizedPlan match {
+      case r: LocalRelation if !r.isStreaming => Some(r.data)
+      case _ => None
+    }
+
+  /** [[csv]] for rows already on the driver: clears `dir`, as an
+    * overwrite does, and commits one `part-00000-<uuid>-c000.csv` the way
+    * Spark's file committer does — written under a hidden name, renamed
+    * into place, then `_SUCCESS` — through `dir`'s Hadoop filesystem. */
+  private def csvFromDriver(df: DataFrame, rows: Seq[InternalRow], dir: String): Unit = {
+    val spark = df.sparkSession
+    val conf = spark.sessionState.conf
+    val options = new CSVOptions(Map("header" -> "true"), conf.csvColumnPruning,
+      conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    val out = new Path(dir)
+    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(out) && !fs.delete(out, true))
+      throw new java.io.IOException(s"could not clear $out")
+    val part = new Path(out,
+      s"part-00000-${java.util.UUID.randomUUID()}-c000.${options.extension}")
+    val tmp = new Path(out, s".${part.getName}.tmp")
+    val gen = new UnivocityGenerator(df.schema, new java.io.OutputStreamWriter(
+      fs.create(tmp, false), java.nio.charset.Charset.forName(options.charset)), options)
+    try {
+      if (options.headerFlag) gen.writeHeaders()
+      rows.foreach(gen.write)
+    } finally gen.close()
+    if (!fs.rename(tmp, part))
+      throw new java.io.IOException(s"could not commit $tmp to $part")
+    fs.create(new Path(out, "_SUCCESS"), true).close()
   }
 
   /** Formats a batch time the way the reference names processed folders
@@ -181,10 +240,9 @@ object Sinks {
     private[io] def fileName(key: String): String =
       java.net.URLEncoder.encode(key, "UTF-8") + ".json"
 
-    private def mapper = {
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      m
-    }
+    /** One per JVM: an `ObjectMapper` is thread-safe once configured,
+      * and building one costs more than the put it serves. */
+    private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
     private[io] def toJson(item: Map[String, String]): String = {
       val jm = new java.util.LinkedHashMap[String, String]()
@@ -222,34 +280,52 @@ object Sinks {
     * the reference's sink-side `Decimal(str(round(x,2)))` and `isoformat()`
     * (`Task_2/task_2.py:163-173,185-192`): doubles → `DECIMAL(12,2)`
     * (HALF_UP, matching DynamoDB's decimal coercion), dates/timestamps →
-    * ISO strings. One client per partition, not per row.
+    * ISO strings. Puts go in batches of 25 (DynamoDB's batch-write size),
+    * one client per partition, not per row.
+    *
+    * A frame whose rows are on the driver (see [[Sinks]]) is coerced by
+    * the same plan, which Catalyst folds into the driver-side rows, and
+    * put from the driver with one client; any other frame is put by its
+    * partitions' tasks.
     */
   def kvUpsert(df: DataFrame, table: String, keyCols: Seq[String],
                clientFactory: () => KvClient): Unit = {
-    val coerced = df.schema.fields.foldLeft(df) { (acc, f) =>
-      f.dataType match {
-        case DoubleType | _: DecimalType =>
-          acc.withColumn(f.name, col(f.name).cast(DecimalType(12, 2)).cast("string"))
-        case DateType =>
-          acc.withColumn(f.name, date_format(col(f.name), "yyyy-MM-dd"))
-        case TimestampType =>
-          acc.withColumn(f.name, date_format(col(f.name), "yyyy-MM-dd'T'HH:mm:ss"))
-        case _ =>
-          acc.withColumn(f.name, col(f.name).cast("string"))
-      }
-    }
+    val coerced = df.select(df.schema.fields.toSeq.map(kvString): _*)
     val names = coerced.schema.fieldNames
-    coerced.foreachPartition { (rows: Iterator[Row]) =>
-      val client = clientFactory()
-      try rows.grouped(25).foreach { batch => // DynamoDB batch-write size
-        client.putBatch(table, batch.map { r =>
-          val item = names.zipWithIndex.map { case (n, i) =>
-            n -> (if (r.isNullAt(i)) null else r.getString(i))
-          }.toMap
-          keyCols.map(item(_)).mkString("|") -> item
-        })
-      } finally client.close()
+    driverRows(coerced) match {
+      case Some(rows) =>
+        val client = clientFactory()
+        try rows.grouped(25).foreach { batch =>
+          client.putBatch(table, batch.map(r => kvItem(names, keyCols)(i =>
+            if (r.isNullAt(i)) null else r.getUTF8String(i).toString)))
+        } finally client.close()
+      case None =>
+        coerced.foreachPartition { (rows: Iterator[Row]) =>
+          val client = clientFactory()
+          try rows.grouped(25).foreach { batch =>
+            client.putBatch(table, batch.map(r => kvItem(names, keyCols)(r.getString)))
+          } finally client.close()
+        }
     }
+  }
+
+  /** A column as the KV sink stores it: a string, or null. */
+  private def kvString(f: StructField): Column = {
+    val c = col(f.name)
+    (f.dataType match {
+      case DoubleType | _: DecimalType => c.cast(DecimalType(12, 2)).cast("string")
+      case DateType => date_format(c, "yyyy-MM-dd")
+      case TimestampType => date_format(c, "yyyy-MM-dd'T'HH:mm:ss")
+      case _ => c.cast("string")
+    }).as(f.name)
+  }
+
+  /** One coerced row as a KV item, keyed by its key columns joined with
+    * '|'; `value(i)` is column i's string or null. */
+  private def kvItem(names: Array[String], keyCols: Seq[String])(
+      value: Int => String): (String, Map[String, String]) = {
+    val item = names.indices.map(i => names(i) -> value(i)).toMap
+    keyCols.map(item(_)).mkString("|") -> item
   }
 
   /** Date-partitioned parquet layer (the scale-ready layout for the

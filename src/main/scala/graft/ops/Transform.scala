@@ -41,7 +41,7 @@ object Transform {
     * row anyway. */
   def joinOrdersItems(items: DataFrame, orders: DataFrame): DataFrame = {
     val overlap = orders.columns.toSet.intersect(items.columns.toSet) - "order_id"
-    val renamed = overlap.foldLeft(orders)((df, c) => df.withColumnRenamed(c, s"order_$c"))
+    val renamed = orders.withColumnsRenamed(overlap.map(c => c -> s"order_$c").toMap)
     items.join(renamed, Seq("order_id"), "inner")
   }
 

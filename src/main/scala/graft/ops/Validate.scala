@@ -78,11 +78,16 @@ object Validate {
     deriveDate("returned_at", "return_date")(deriveDate("created_at", "order_date")(kept))
   }
 
+  /** The row-local rules of [[validateItems]]: NOT NULL and positive
+    * price (`Task_1/task_1.py:126-127`), without the RI semi join. An
+    * inner join on `order_id` against the validated orders drops exactly
+    * the rows the semi join would, so a plan that makes that join anyway
+    * (the KPI plan) can start from these rows. */
+  def validateItemRows(items: DataFrame): DataFrame =
+    positive("sale_price")(dropNullsAny(Seq("id", "product_id", "sale_price"))(items))
+
   /** Validated order_items: NOT NULL, positive price, and RI against the
     * already-validated orders (`Task_1/task_1.py:126-131`). */
-  def validateItems(items: DataFrame, validOrders: DataFrame): DataFrame = {
-    val kept = positive("sale_price")(
-      dropNullsAny(Seq("id", "product_id", "sale_price"))(items))
-    semiJoinRI(validOrders, "order_id")(kept)
-  }
+  def validateItems(items: DataFrame, validOrders: DataFrame): DataFrame =
+    semiJoinRI(validOrders, "order_id")(validateItemRows(items))
 }

@@ -16,14 +16,16 @@ import graft.schema.Schemas
   *  - the validated layer is typed parquet, not a CSV round-trip
   *    (SURVEY.md §7.5 item 7) — `order_date` stays DateType end to end
   *    and is formatted ISO only at the KV boundary;
-  *  - the KV sink writes partition-parallel (`Sinks.kvUpsert`) instead of
-  *    a driver row loop;
-  *  - the KPI plan (read → join → one aggregate for both tables) runs
-  *    once per batch: its result is collected to the driver and every
-  *    sink reads that copy;
+  *  - the KPI plan (join → one aggregate for both tables) runs once per
+  *    batch, from the same validated frames the validated layer is
+  *    written from and at the same time as those writes, not from a
+  *    read-back of the layer;
+  *  - its result is collected to the driver, every sink reads that copy,
+  *    and the sinks write it from the driver (`Sinks.kvUpsert`,
+  *    `Sinks.csvTimestamped`): no Spark job runs for rows already there;
   *  - actions that do not depend on each other run concurrently on the
-  *    driver (the three validated-layer writes, the four sink writes),
-  *    and the archive runs last, after every sink has finished.
+  *    driver (the validated-layer writes and the KPI plan, the four sink
+  *    writes), and the archive runs last, after every sink has finished.
   */
 object Batch {
 
@@ -61,16 +63,17 @@ object Batch {
 
   /** Task 2 — transformation (`Task_2/task_2.py:57-139`): the one KPI
     * aggregate that feeds both tables ([[Transform.kpiAggregate]]) runs
-    * once and comes back as a driver-resident frame of one partition;
-    * both KPI tables are projections of it, so every sink reads the
-    * computed rows instead of re-running the plan, and a CSV sink writes
-    * exactly one part. Safe to collect: the aggregate is bounded by
-    * categories × days, never by fact rows. */
+    * once and comes back as driver-side rows; both KPI tables are
+    * projections of them, which Catalyst folds into a `LocalRelation`.
+    * So every sink reads the computed rows instead of re-running the
+    * plan, and writes them from the driver: no Spark job, and a CSV sink
+    * writes exactly one part. Safe to collect: the aggregate is bounded
+    * by categories × days, never by fact rows. [[runAll]] runs this
+    * alongside the validated-layer writes. */
   def transform(v: Validated): (DataFrame, DataFrame) = {
     val agg = Transform.kpiAggregate(Transform.merged(v.items, v.orders, v.products))
     val rows = agg.sparkSession
       .createDataFrame(java.util.Arrays.asList(agg.collect(): _*), agg.schema)
-      .coalesce(1)
     (Transform.catKpi(rows), Transform.orderKpi(rows))
   }
 
@@ -86,18 +89,30 @@ object Batch {
       () => Sinks.csvTimestamped(orderKpi, processedDir, "order_kpi", ts))
   }
 
-  /** Full run: validate → materialize → transform → sinks → archive, the
-    * Step Function's Task1→Task2 serialization collapsed into one driver
-    * program (data passes through the validated layer, not via S3 hops).
-    * Each step waits for all of its actions; the archive runs strictly
-    * after the sinks complete (SURVEY.md §7.5 item 5). */
+  /** Full run: validate → (materialize ‖ transform) → sinks → archive,
+    * the Step Function's Task1→Task2 serialization collapsed into one
+    * driver program. The KPI plan does not wait for the validated layer:
+    * it runs on the validated frames while they are written, and nothing
+    * reads the layer back ([[readValidated]] serves a Task 2 run on its
+    * own). Its items are those before the RI semi join
+    * ([[Validate.validateItemRows]]). That is exact, because
+    * [[Transform.joinOrdersItems]] is an inner join on `order_id` against
+    * the same validated orders, (items ⋉ O) ⋈ O = items ⋈ O, and the plan
+    * broadcasts the orders once instead of twice. Each step waits for all
+    * of its actions: the sinks start once the validated layer has
+    * committed, and the archive runs strictly after the sinks complete
+    * (SURVEY.md §7.5 item 5). */
   def runAll(spark: SparkSession, rawDir: String, workDir: String,
              kvFactory: () => Sinks.KvClient,
              batchTimeMillis: Long = System.currentTimeMillis()): Unit = {
     val ts = Sinks.batchTimestamp(batchTimeMillis)
-    val v = validate(readRaw(spark, rawDir))
-    writeValidated(v, s"$workDir/validated")
-    val (cat, ord) = transform(readValidated(spark, s"$workDir/validated"))
+    val in = readRaw(spark, rawDir)
+    val v = validate(in)
+    val kpis = new AtomicReference[(DataFrame, DataFrame)]()
+    concurrently(
+      () => writeValidated(v, s"$workDir/validated"),
+      () => kpis.set(transform(v.copy(items = Validate.validateItemRows(in.items)))))
+    val (cat, ord) = kpis.get
     writeSinks(cat, ord, s"$workDir/processed", ts, kvFactory)
     Sinks.archive(spark, rawDir, s"$workDir/archive", ts)
   }
@@ -122,7 +137,12 @@ object Batch {
     * the job group [[Watchdog.runWithBudget]] and
     * [[Streaming.enforceBudget]] cancel, and the streaming query's own —
     * which a pooled thread would carry over from whichever run used it
-    * last. The first failure is rethrown once every action has finished. */
+    * last. The first failure is rethrown once every action has finished.
+    *
+    * An interrupt of the wait (a budget ran out, or the streaming query
+    * was stopped) is passed on to every action: a driver-side sink write
+    * is no Spark job, so cancelling a job group cannot stop it. The
+    * interrupt is rethrown once every action has finished. */
   private def concurrently(actions: (() => Any)*): Unit = {
     val failure = new AtomicReference[Throwable]()
     val threads = actions.zipWithIndex.map { case (action, i) =>
@@ -134,7 +154,15 @@ object Batch {
       t.start()
       t
     }
-    threads.foreach(_.join())
+    try threads.foreach(_.join())
+    catch {
+      case e: InterruptedException =>
+        threads.foreach(_.interrupt())
+        threads.foreach { t =>
+          while (t.isAlive) try t.join() catch { case _: InterruptedException => () }
+        }
+        throw e
+    }
     Option(failure.get).foreach(e => throw e)
   }
 }

@@ -130,9 +130,11 @@ object Streaming {
     * then terminates with the cancellation exception and the
     * registered [[StatusFileListener]] writes the terminal FAILED
     * record, exactly like any other query failure. If the query
-    * somehow stays active (idle between batches, nothing to cancel),
-    * it is stopped directly and the FAILED record is written here —
-    * either way a durable terminal record exists.
+    * stays active (idle between batches, or in driver-side work that no
+    * job group reaches, such as a sink writing driver-resident rows),
+    * it is stopped directly — `stop()` interrupts the batch — and the
+    * FAILED record is written here; either way a durable terminal
+    * record exists.
     *
     * Returns the watchdog thread; `interrupt()` it when the query
     * finishes inside its budget. */

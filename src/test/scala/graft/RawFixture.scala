@@ -80,4 +80,41 @@ object RawFixture {
     parts("order_items", "id,order_id,user_id,product_id,status,created_at,shipped_at," +
       "delivered_at,returned_at,sale_price", itemRows.result(), 4)
   }
+
+  /** Adds FIXTURES.md §A.4's poisoned rows to a drop [[stage]] wrote, as
+    * one more part-file each for orders and order_items. One order lacks
+    * its id, order 91 its `user_id` and order 92 its `created_at`;
+    * order 93 is valid. Its items are one clean item and one per rule:
+    * a null `id`, `product_id` or `sale_price`, a price of 0 and of
+    * -1.5, and a product absent from `products.csv` (kept; it has no
+    * category). The items of orders 91, 92 and 99999 are RI orphans. */
+  def poison(dir: String): Unit = {
+    val day = "2025-03-09T10:00:00"
+    val next = "2025-03-10T10:00:00"
+    val orders = Seq(
+      s",1001,delivered,$day,,$next,$next,1",
+      s"91,,delivered,$day,,$next,$next,1",
+      s"92,1002,returned,,$next,$next,$next,1",
+      s"93,1003,returned,$day,$next,$next,$next,8")
+    def item(id: String, order: Int, product: String, price: String) =
+      Seq(id, order, 1003, product, "returned", day, next, next, next, price).mkString(",")
+    val items = Seq(
+      item("900001", 91, "1", "10.00"),
+      item("900002", 92, "2", "20.00"),
+      item("900003", 99999, "3", "30.00"),
+      item("", 93, "4", "40.00"),
+      item("900005", 93, "", "50.00"),
+      item("900006", 93, "5", ""),
+      item("900007", 93, "6", "0"),
+      item("900008", 93, "7", "-1.5"),
+      item("900009", 93, "999", "60.25"),
+      item("900010", 93, "8", "70.50"))
+    Files.write(Paths.get(s"$dir/orders/orders_part4.csv"),
+      ("order_id,user_id,status,created_at,returned_at,shipped_at,delivered_at,num_of_item" +:
+        orders).mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    Files.write(Paths.get(s"$dir/order_items/order_items_part5.csv"),
+      (("id,order_id,user_id,product_id,status,created_at,shipped_at,delivered_at," +
+        "returned_at,sale_price") +: items).mkString("", "\n", "\n")
+        .getBytes(StandardCharsets.UTF_8))
+  }
 }

@@ -1,11 +1,15 @@
 package graft.io
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-import graft.SparkSpec
+import graft.{JobCount, SparkSpec}
 
 /** Local fs whose `rename` reports failure without moving anything —
   * the HDFS answer when the destination already exists. */
@@ -99,6 +103,85 @@ class SinksSpec extends SparkSpec {
     Sinks.kvUpsert(df, "kpi", Seq("order_date"),
       () => new Sinks.DynamoShapedKvClient(new Sinks.FileBatchWriteStore(base2)))
     assert(Sinks.FileKv.read(base2, "kpi")("2025-03-08")("rev") == "10.50")
+  }
+
+  /** Rows the sinks coerce or quote: nulls in every column, doubles on a
+    * HALF_UP tie, a decimal, dates, a timestamp, and strings holding the
+    * CSV delimiter and quote. */
+  private val venueSchema = StructType(Seq(
+    StructField("k", StringType), StructField("d", DateType), StructField("t", TimestampType),
+    StructField("x", DoubleType), StructField("m", DecimalType(10, 3)),
+    StructField("n", LongType), StructField("s", StringType)))
+  private val venueRows = Seq(
+    Row("a", java.sql.Date.valueOf("2025-03-08"), java.sql.Timestamp.valueOf("2025-03-08 10:11:12"),
+      0.125, new java.math.BigDecimal("1.005"), 1L, "plain"),
+    Row("b", java.sql.Date.valueOf("2025-03-09"), java.sql.Timestamp.valueOf("2025-03-09 00:00:00"),
+      87.955, new java.math.BigDecimal("-2.675"), -2L, "comma, \"quoted\""),
+    Row("c", null, null, null, null, null, null),
+    Row("d", java.sql.Date.valueOf("2025-12-31"), java.sql.Timestamp.valueOf("2025-12-31 23:59:59"),
+      -69188.4712, new java.math.BigDecimal("0.000"), Long.MaxValue, ""))
+
+  /** The same rows on the driver (a `LocalRelation`) and in a frame the
+    * executors compute from an RDD of `partitions` partitions. */
+  private def venues(rows: Seq[Row], partitions: Int): (DataFrame, DataFrame) =
+    (spark.createDataFrame(rows.asJava, venueSchema),
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, partitions), venueSchema))
+
+  private def partFiles(dir: String): Seq[java.nio.file.Path] =
+    Files.list(Paths.get(dir)).iterator().asScala
+      .filter(p => p.getFileName.toString.startsWith("part-")).toVector
+
+  test("kvUpsert puts the same items from the driver and from executor tasks") {
+    val base = Files.createTempDirectory("graft-kv-venues").toString
+    val (local, remote) = venues(venueRows, 1)
+    val sources = Seq("driver" -> local, "executors" -> remote.repartition(2))
+    val jobs = sources.map { case (name, df) =>
+      JobCount(spark) {
+        Sinks.kvUpsert(df, name, Seq("k", "d"), () => new Sinks.FileKvClient(base))
+      }._2
+    }
+    assert(jobs.head == 0 && jobs(1) > 0, s"jobs per venue: $jobs")
+    val driver = Sinks.FileKv.read(base, "driver")
+    assert(driver == Sinks.FileKv.read(base, "executors"))
+    assert(driver.size == 4)
+    val a = driver("a|2025-03-08")
+    assert(a("x") == "0.13" && a("m") == "1.01" && a("t") == "2025-03-08T10:11:12")
+    assert(driver("b|2025-03-09")("x") == "87.96" && driver("b|2025-03-09")("m") == "-2.68")
+    assert(driver("c|null") == Map("k" -> "c", "d" -> null, "t" -> null, "x" -> null,
+      "m" -> null, "n" -> null, "s" -> null))
+  }
+
+  test("csvTimestamped writes byte-identical parts from the driver and from executor tasks") {
+    val base = Files.createTempDirectory("graft-csv-venues").toString
+    Seq("rows" -> venueRows, "empty" -> Nil).foreach { case (label, rows) =>
+      val (local, remote) = venues(rows, 1)
+      val parts = Seq("driver" -> local, "executors" -> remote).map { case (name, df) =>
+        val (dir, jobs) = JobCount(spark) { Sinks.csvTimestamped(df, base, s"$label-$name", "t0") }
+        assert((jobs == 0) == (name == "driver"), s"$label/$name ran $jobs jobs")
+        assert(Files.exists(Paths.get(dir, "_SUCCESS")), s"$label/$name")
+        val files = partFiles(dir)
+        assert(files.size == 1 && files.head.getFileName.toString.endsWith("-c000.csv"),
+          s"$label/$name: $files")
+        new String(Files.readAllBytes(files.head), "UTF-8")
+      }
+      assert(parts.head == parts(1), label)
+      if (rows.isEmpty) assert(parts.head == "k,d,t,x,m,n,s\n")
+    }
+  }
+
+  test("a rerun into the same processed/<ts>/<table> leaves one part with its own rows") {
+    val base = Files.createTempDirectory("graft-csv-rerun").toString
+    val (local, remote) = venues(venueRows, 1)
+    val second = local.filter(col("k") === "a")
+    Seq("after-driver" -> local, "after-executors" -> remote.repartition(3)).foreach {
+      case (name, first) =>
+        Sinks.csvTimestamped(first, base, name, "t0")
+        val dir = Sinks.csvTimestamped(second, base, name, "t0")
+        val files = partFiles(dir)
+        assert(files.size == 1, s"$name: $files")
+        val lines = Files.readAllLines(files.head).asScala
+        assert(lines.size == 2 && lines(1).startsWith("a,2025-03-08,"), s"$name: $lines")
+    }
   }
 
   test("csv sink round-trips with header; timestamped sink nests under ts") {

@@ -138,6 +138,33 @@ class WatchdogSpec extends SparkSpec {
     assert(!Files.exists(java.nio.file.Paths.get(s"$work/archive")))
   }
 
+  test("enforceBudget stops a runAvailableNow drop whose KV puts block on the driver; " +
+    "raw stays unarchived") {
+    val (raw, work) = stagedDrop()
+    val before = rawFiles(raw)
+    val puts = WatchdogSpec.blockedPuts.get
+    // the KPI rows are put from the driver, where no job group reaches
+    // them: the query must still stop
+    val budget = 8000L
+    val t0 = System.currentTimeMillis()
+    val q = Streaming.runAvailableNow(spark, raw, work, WatchdogSpec.blockingKv, 0L)
+    val wd = Streaming.enforceBudget(spark, q, budget, s"$work/status")
+    try {
+      try q.awaitTermination(60000)
+      catch { case _: StreamingQueryException => () }
+      wd.join(30000) // it returns once the query has stopped
+      assert(!q.isActive, "the over-budget query is still running")
+      val late = System.currentTimeMillis() - t0 - budget
+      assert(late < 20000, s"the query stopped $late ms after the deadline")
+      assert(WatchdogSpec.blockedPuts.get > puts, "the budget expired before the KV sink ran")
+      assert(rawFiles(raw) == before)
+      assert(!Files.exists(java.nio.file.Paths.get(s"$work/archive")))
+    } finally {
+      q.stop()
+      if (wd.isAlive) wd.interrupt()
+    }
+  }
+
   test("a failing KV client makes runAll rethrow, and the archive does not run") {
     val (raw, work) = stagedDrop()
     val before = rawFiles(raw)
