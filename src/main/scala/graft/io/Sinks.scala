@@ -347,7 +347,10 @@ object Sinks {
     * open/footer overhead dominates scan time at 100 TB. Rewrites a
     * parquet directory into ceil(bytes / targetBytes) files via a
     * coalesce (no shuffle — coalesce only merges existing partitions)
-    * and atomically swaps it in. Returns the new file count. */
+    * and atomically swaps it in. Returns the new file count. Throws an
+    * `IOException` naming both paths when the swap fails (`delete` or
+    * `rename` returns false): the rows then sit only under
+    * `<dir>_compacting`, and reporting success would lose them. */
   def compactParquet(spark: SparkSession, dir: String,
                      targetBytes: Long = 128L * 1024 * 1024): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -360,8 +363,8 @@ object Sinks {
     val tmp = new Path(path.getParent, path.getName + "_compacting")
     spark.read.parquet(dir).coalesce(nFiles)
       .write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(path, true)
-    fs.rename(tmp, path)
+    if (!fs.delete(path, true) || !fs.rename(tmp, path))
+      throw new java.io.IOException(s"could not swap compacted $tmp into $path")
     nFiles
   }
 

@@ -663,23 +663,17 @@ object Manifest {
 
   /** The committed snapshot of `dir` at version `v` (or latest) — the
     * planner-integration entry point ([[graft.plans.ManifestFileIndex]]
-    * builds its file listing and pruning state from it). */
+    * builds its file listing and pruning state from it): the memoized
+    * [[snapshotMeta]] header (configuration, chain, effective DV set
+    * and column map) plus its [[entries]]. */
   private[graft] def loadSnapshot(spark: SparkSession, dir: String,
                                   v: Option[Long] = None): Snapshot = {
-    val (_, root) = fsOf(spark, dir)
-    val ver = v.orElse(latestVersion(spark, dir))
-      .getOrElse(throw new IllegalArgumentException(s"no table at $dir"))
-    readSnapshot(spark, root, ver)
+    val meta = snapshotMeta(spark, dir, v)
+    Snapshot(entries(spark, meta), meta.ddl, meta.statsCols, meta.bloomCols,
+      meta.dvDirs, meta.constraints, new Path(meta.manifestDirs.last).getName,
+      meta.colMap)
   }
 
-  /** Every manifest leads with a schema SENTINEL entry (`path = ""`, no
-    * file) carrying the table schema and stats configuration ONCE: a
-    * snapshot whose rows were all deleted still knows its schema, and
-    * file entries stay slim. This is the TABLE-BIRTH commit shape
-    * ([[create]], [[commitAll]]'s new-table branch): no parent exists,
-    * so no delta sidecar — every later commit stages through
-    * [[linkManifest]]/[[compactManifest]]/[[freshManifest]], which own
-    * their sidecar economics. */
   /** Sentinel JSON sidecar inside a manifest dir: the sentinel row
     * (schema/stats/bloom/constraints/DV/colmap configuration) written
     * once, at staging time, next to the parquet part that carries it —
@@ -743,33 +737,214 @@ object Manifest {
       spark, enc.schema, entries.iterator.map(ser(_)), file.toString)
   }
 
-  private def writeManifest(spark: SparkSession, root: Path,
-                            entries: Seq[Entry], ddl: String,
-                            statsCols: Seq[String],
-                            bloomCols: Seq[String],
-                            dvDirs: Seq[String],
-                            constraints: Seq[String]): String = {
+  // -------- manifest staging --------
+  //
+  // Every commit stages one new `m-<uuid>` dir in one of two shapes: a
+  // ROOTED manifest ([[writeRooted]]: schema sentinel + entries +
+  // sentinel sidecar, self-contained) or a LINKED one ([[linkManifest]]:
+  // the commit's own entries + a base file naming the chain it
+  // extends). [[stageManifest]] is the one place that picks between
+  // linking and re-rooting.
+
+  /** The schema SENTINEL entry a rooted manifest leads with (`path =
+    * ""`, no file): the table schema and its stats / bloom / DV /
+    * constraint configuration, carried ONCE — a snapshot whose rows
+    * were all deleted still knows its schema, and file entries stay
+    * [[slim]]. The otherwise meaningless `values` slot carries the
+    * COLUMN MAP ("logical=physical" per entry, see [[renameColumn]]):
+    * zero format change — every existing manifest reads as the empty
+    * (identity) map, and every Entry-shaped consumer (checkpoints,
+    * delta sidecars, chain state) carries it verbatim. */
+  private def sentinelEntry(ddl: String, statsCols: Seq[String],
+                            bloomCols: Seq[String] = Nil,
+                            dvDirs: Seq[String] = Nil,
+                            constraints: Seq[String] = Nil,
+                            colMap: Seq[String] = Nil): Entry =
+    ManifestEntry("", colMap, has_null = false, overflow = false,
+      rows = 0L, bytes = 0L, schema_ddl = ddl, stat_cols = statsCols,
+      stat_mins = Seq.empty, stat_maxs = Seq.empty, bloom_cols = bloomCols,
+      dv_dirs = dvDirs, constraints = constraints)
+
+  /** `meta`'s configuration as a sentinel over the DV set `dvDirs` —
+    * every rooted commit on top of a parent states what becomes of the
+    * parent's EFFECTIVE set (`meta.dvDirs`, which a re-root absorbs
+    * from the chain): kept, extended, or retired (`Nil`). The effective
+    * column map folds in the same way. A commit that changes another
+    * part of the configuration `copy`s the field it changes. */
+  private def sentinelOf(meta: SnapshotMeta, dvDirs: Seq[String]): Entry =
+    sentinelEntry(meta.ddl, meta.statsCols, meta.bloomCols, dvDirs,
+      meta.constraints, meta.colMap)
+
+  /** A file entry without the configuration fields the sentinel
+    * carries once. */
+  private def slim(e: Entry): Entry =
+    e.copy(schema_ddl = "", stat_cols = Seq.empty, bloom_cols = Seq.empty,
+      dv_dirs = Seq.empty, constraints = Seq.empty)
+
+  /** A fresh manifest dir: its `m-<uuid>` name and path. */
+  private def newManifestDir(root: Path): (String, Path) = {
     val name = s"m-${UUID.randomUUID()}"
-    val dir = new Path(new Path(root, ManifestsDir), name).toString
-    // the sentinel's (otherwise meaningless) `values` slot carries the
-    // COLUMN MAP ("logical=physical" per entry, see [[renameColumn]]):
-    // zero format change — every existing manifest reads as the empty
-    // (identity) map, and every Entry-shaped consumer (checkpoints,
-    // delta sidecars, chain state) carries it verbatim. A newborn
-    // table's map is the identity (empty).
-    val sentinel = ManifestEntry("", Seq.empty,
-      has_null = false,
-      overflow = false, rows = 0L, bytes = 0L, schema_ddl = ddl,
-      stat_cols = statsCols, stat_mins = Seq.empty, stat_maxs = Seq.empty,
-      bloom_cols = bloomCols, dv_dirs = dvDirs, constraints = constraints)
-    val slim = entries.map(e =>
-      if (e.schema_ddl.isEmpty && e.stat_cols.isEmpty &&
-        e.bloom_cols.isEmpty && e.dv_dirs.isEmpty && e.constraints.isEmpty) e
-      else e.copy(schema_ddl = "", stat_cols = Seq.empty,
-        bloom_cols = Seq.empty, dv_dirs = Seq.empty, constraints = Seq.empty))
-    writeEntriesLocal(spark, new Path(dir), sentinel +: slim)
+    (name, new Path(new Path(root, ManifestsDir), name))
+  }
+
+  /** Stage a ROOTED manifest in a fresh dir: `sentinel`, `rows`, then
+    * the `dist` relation when given — driver-resident rows alone go out
+    * as one part through [[writeEntriesLocal]] (no Spark job), a
+    * distributed relation is written `nParts` wide so its entries never
+    * visit the driver — and the sentinel sidecar. Returns the name. */
+  private def writeRooted(spark: SparkSession, root: Path, sentinel: Entry,
+                          rows: Seq[Entry],
+                          dist: Option[(DataFrame, Int)] = None): String = {
+    import spark.implicits._
+    val (name, dir) = newManifestDir(root)
+    dist match {
+      case None => writeEntriesLocal(spark, dir, sentinel +: rows)
+      case Some((df, nParts)) => (sentinel +: rows).toDF().unionByName(df)
+        .coalesce(nParts).write.parquet(dir.toString)
+    }
     writeSentinelFile(root.getFileSystem(
-      spark.sparkContext.hadoopConfiguration), new Path(dir), sentinel)
+      spark.sparkContext.hadoopConfiguration), dir, sentinel)
+    name
+  }
+
+  /** A rooted manifest of `adds` alone: the TABLE-BIRTH shape
+    * ([[create]], [[commitAll]]'s new-table branch) and the full-
+    * REPLACEMENT shape ([[overwrite]], [[clusterBy]], [[commitAll]]'s
+    * overwrite writes — sentinel = the parent's configuration with the
+    * DV set reset). Nothing carries from a parent, so staging is
+    * O(adds) driver-side at any table size. No delta sidecar: the
+    * change set IS the table, exactly the case [[writeDeltaIfSmall]]
+    * skips; tail-replay readers fall back to the exact scan. */
+  private def writeManifest(spark: SparkSession, root: Path, sentinel: Entry,
+                            adds: Seq[Entry]): String =
+    writeRooted(spark, root, sentinel, adds.map(slim))
+
+  /** [[writeManifest]]'s DISTRIBUTED twin for table-birth commits whose
+    * entry set is already a DataFrame ([[convert]] adopting 10⁷
+    * files): the per-file list never visits the driver, and the parts
+    * are sized like a compaction's (~120 B per slim entry on disk). */
+  private[graft] def writeManifestDist(spark: SparkSession, root: Path,
+                                       entriesDf: DataFrame, ddl: String,
+                                       statsCols: Seq[String],
+                                       nEntries: Long): String =
+    writeRooted(spark, root, sentinelEntry(ddl, statsCols), Nil, Some((
+      entriesDf, math.max(1L, nEntries * 120L / ManifestTargetBytes).toInt)))
+
+  /** The delta sidecar rule: commit `name` on top of `parent` records
+    * its change set ([[writeDeltaFile]]) only while the set is small
+    * against the parent (entry count estimated from chain bytes). The
+    * rule is economic, not correctness — an oversized replay is just
+    * slower than the exact scan — so a failed write is only reported. */
+  private def writeDeltaIfSmall(spark: SparkSession, root: Path, name: String,
+                                parent: SnapshotMeta, adds: Seq[Entry],
+                                removes: Seq[String]): Unit = {
+    val estEntries = math.max(1L, parent.manifestBytes / 64)
+    if (adds.size + removes.size <= math.max(4096, estEntries / 8))
+      try writeDeltaFile(spark, root, name, ManifestDelta(
+        new Path(parent.manifestDirs.last).getName, adds, removes))
+      catch {
+        case scala.util.control.NonFatal(t) =>
+          System.err.println(s"[graft] delta sidecar for $name skipped: $t")
+      }
+  }
+
+  /** Stage a commit of `adds` / `removes` / `dvAdds` / a new column map
+    * on top of `meta` — the ONE link-or-re-root decision. The commit
+    * LINKS ([[linkManifest]], O(batch)) when
+    *  - the chain has headroom ([[AppendMaxChainKey]]),
+    *  - the cumulative remove set stays within [[LinkedRemovesCap]],
+    *  - and the chain ROOT's physical parquet schema matches this
+    *    writer's [[ManifestEntry]] encoder exactly: a chain must read as
+    *    ONE uniform relation, and mixing an old-library manifest
+    *    (missing a column) with a new part would leave schema inference
+    *    to whichever footer Spark samples. One footer read; every link
+    *    passed the check at its own write, so the root covers the chain.
+    * Otherwise it RE-ROOTS ([[compactManifest]]) under `meta`'s
+    * configuration, whose fresh sentinel absorbs the DV adds and the
+    * map. Commits that change the configuration itself (schema,
+    * constraints, blooms, a DV-retiring fold) re-root directly. */
+  private def stageManifest(spark: SparkSession, fs: FileSystem, root: Path,
+                            meta: SnapshotMeta, adds: Seq[Entry],
+                            removes: Seq[String] = Nil,
+                            dvAdds: Seq[String] = Nil,
+                            colMapOut: Option[Seq[String]] = None): String = {
+    val want = org.apache.spark.sql.Encoders.product[ManifestEntry].schema
+    def uniform = org.apache.spark.sql.GraftParquetBridge
+      .localInferSchema(spark, meta.manifestDirs.head)
+      .exists(got => got.fields.map(f => (f.name, f.dataType)).toSeq ==
+        want.fields.map(f => (f.name, f.dataType)).toSeq)
+    if (meta.manifestDirs.length < spark.sparkContext.hadoopConfiguration
+        .getLong(AppendMaxChainKey, AppendMaxChainDefault) &&
+      meta.removedPaths.size + removes.size <= LinkedRemovesCap && uniform)
+      linkManifest(spark, fs, root, meta, adds, removes, dvAdds, colMapOut)
+    else compactManifest(spark, root, meta,
+      sentinelOf(meta, meta.dvDirs ++ dvAdds)
+        .copy(values = colMapOut.getOrElse(meta.colMap)), adds, removes)
+  }
+
+  /** Stage the O(batch) LINKED manifest: one small parquet part with
+    * the batch's slim entries, the [[BaseFile]] carrying the FULL
+    * cumulative chain state (ancestors base-first + every path removed
+    * along the chain + this commit's `removes`, trailer-guarded so a
+    * torn write can never silently resurrect rows), and the delta
+    * sidecar (tail replay works across linked commits unchanged). The
+    * dir is an orphan until the caller's pointer create lands — a
+    * crash anywhere here leaves vacuum-reclaimable garbage, never a
+    * readable partial manifest. */
+  private def linkManifest(spark: SparkSession, fs: FileSystem, root: Path,
+                           meta: SnapshotMeta, adds: Seq[Entry],
+                           removes: Seq[String], dvAdds: Seq[String],
+                           colMapOut: Option[Seq[String]]): String = {
+    val (name, dst) = newManifestDir(root)
+    val slimAdds = adds.map(slim)
+    // driver-side single-part write — the same encoder +
+    // ParquetWriteSupport pipeline that wrote the parent chain, so the
+    // physical schemas stay identical; no Spark job for a few KB
+    if (slimAdds.nonEmpty) writeEntriesLocal(spark, dst, slimAdds)
+    else fs.mkdirs(dst)
+    // the DV set and the column map ride the chain cumulatively, like
+    // the removes; a rename/drop/undrop commit replaces the attached
+    // map wholesale (colMapOut)
+    val lines = meta.manifestDirs.map(d => s"base:${new Path(d).getName}") ++
+      (meta.removedPaths ++ removes).map(r => s"remove:$r") ++
+      (meta.chainDvDirs ++ dvAdds).map(d => s"dv:$d") ++
+      colMapOut.getOrElse(meta.chainColMap).map(c => s"colmap:$c")
+    val out = fs.create(new Path(dst, BaseFile), false)
+    try out.write((lines.mkString("\n") + s"\nend:${lines.size}\n")
+      .getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+    writeDeltaIfSmall(spark, root, name, meta, slimAdds, removes)
+    name
+  }
+
+  /** RE-ROOT the chain: a rooted manifest of `sentinel`, this commit's
+    * `adds`, and the parent chain's entries minus `removes`, sized to
+    * [[ManifestTargetBytes]] per part. A chain under both the driver-
+    * read budget and one part's target carries its few-KB entry list
+    * through [[entries]]' driver-local decode into one local part —
+    * zero Spark jobs, the same on-disk shape the distributed write
+    * would give; past either bound the carried entries flow executor-
+    * to-executor and driver heap stays O(batch). Serves the chain cap,
+    * configuration changes (the fresh sentinel carries them), a parent
+    * whose physical schema predates this library (the rewrite pads it
+    * uniform), and a clone's first commit (`writeSidecar = false`: its
+    * parent link would name a manifest the clone's root does not
+    * retain). */
+  private def compactManifest(spark: SparkSession, root: Path,
+                              meta: SnapshotMeta, sentinel: Entry,
+                              adds: Seq[Entry], removes: Seq[String] = Nil,
+                              writeSidecar: Boolean = true): String = {
+    val slimAdds = adds.map(slim)
+    val name =
+      if (meta.manifestBytes <
+        math.min(localReadBudget(spark), ManifestTargetBytes))
+        writeRooted(spark, root, sentinel,
+          slimAdds ++ entries(spark, meta, removes))
+      else writeRooted(spark, root, sentinel, slimAdds,
+        Some((entriesDataset(spark, meta, removes).toDF(),
+          math.max(1L, meta.manifestBytes / ManifestTargetBytes).toInt)))
+    if (writeSidecar)
+      writeDeltaIfSmall(spark, root, name, meta, slimAdds, removes)
     name
   }
 
@@ -908,20 +1083,14 @@ object Manifest {
     }
   }
 
-  /** Driver-LOCAL manifest entry read: parquet-mr Group decoding of
-    * the chain's part files, zero Spark jobs — the metadata twin of
-    * the driver-resident planning venue. A distributed read of a
-    * few-KB manifest costs a whole Spark job (several under AQE) per
-    * snapshot resolution, and one lifecycle resolves snapshots dozens
-    * of times. Gated by the SAME budget as planning venue choice
-    * ([[graft.plans.ManifestScan.DistributedMinBytesKey]]); above it
-    * callers stay on the distributed chokepoint. Decoding mirrors
-    * [[paddedManifest]]'s forward-compat contract exactly: a column
-    * missing from an old manifest's physical schema pads with its
-    * neutral default ("" / 0 / false / empty list); chain removes are
-    * subtracted here as there. Parity is spec-pinned
-    * (ManifestLocalReadSpec: local == distributed, field for field). */
-  private def localReadBudget(spark: SparkSession): Long =
+  /** The metadata venue budget — the ONE read of
+    * [[graft.plans.ManifestScan.DistributedMinBytesKey]]. A manifest
+    * chain (or DV set) smaller on disk than this is read on the driver
+    * with zero Spark jobs; at or past it, distributed. The same bytes
+    * pick the same venue everywhere: planning
+    * ([[graft.plans.ManifestScan.planned]]), [[entries]], candidate
+    * selection, compaction staging and DV decode. */
+  private[graft] def localReadBudget(spark: SparkSession): Long =
     spark.sparkContext.hadoopConfiguration.getLong(
       graft.plans.ManifestScan.DistributedMinBytesKey,
       graft.plans.ManifestScan.DistributedMinBytesDefault)
@@ -962,6 +1131,17 @@ object Manifest {
       strs("bloom_cols"), strs("dv_dirs"), strs("constraints"))
   }
 
+  /** Driver-LOCAL manifest entry read ([[entries]]' venue under the
+    * budget): parquet-mr Group decoding of the chain's part files, zero
+    * Spark jobs — the metadata twin of the driver-resident planning
+    * venue. A distributed read of a few-KB manifest costs a whole Spark
+    * job (several under AQE) per snapshot resolution, and one lifecycle
+    * resolves snapshots dozens of times. Decoding mirrors
+    * [[paddedManifest]]'s forward-compat contract exactly: a column
+    * missing from an old manifest's physical schema pads with its
+    * neutral default ("" / 0 / false / empty list); chain removes are
+    * subtracted here as there. Parity is spec-pinned
+    * (ManifestLocalReadSpec: local == distributed, field for field). */
   private def readEntriesLocalParquet(conf:
       org.apache.hadoop.conf.Configuration, manifestDirs: Seq[String],
       removedPaths: Seq[String]): Seq[Entry] = {
@@ -998,27 +1178,12 @@ object Manifest {
     out.result()
   }
 
-  private def readSnapshot(spark: SparkSession, root: Path,
-                           v: Long): Snapshot = {
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lines = readPointerLines(fs, root, v)
-    // a pending multi-commit pointer is not a committed version: time
-    // travel to it would read a snapshot that never happened
-    require(pointerVisible(fs, lines),
-      s"version $v at $root is a pending multi-table commit, not committed")
-    readSnapshotByName(spark, root, lines.head.trim)
-  }
-
   /** FORWARD-COMPATIBLE manifest relation: a manifest written before a
     * [[ManifestEntry]] field existed simply lacks that column, so it is
     * backfilled with the field's neutral default (empty list / "" / 0 /
     * false) instead of failing `.as[Entry]` resolution — old tables and
     * their time-travel versions stay readable across library upgrades,
     * the same contract a table FORMAT owes its files. */
-  private def paddedManifest(spark: SparkSession,
-                             manifestDir: String): DataFrame =
-    paddedManifest(spark, Seq(manifestDir), Nil)
-
   private def paddedManifest(spark: SparkSession,
                              manifestDirs: Seq[String],
                              removedPaths: Seq[String]): DataFrame = {
@@ -1082,7 +1247,7 @@ object Manifest {
     * sidecar there is no sound fallback — the linked dir alone is an
     * incomplete entry set, and a lost remove line would RESURRECT
     * overwritten rows. Every link was schema-guarded at write time
-    * ([[linkedAppendEligible]]), so all dirs in a chain share one
+    * ([[stageManifest]]), so all dirs in a chain share one
     * physical parquet schema and read as a single relation. */
   private[graft] def chainState(fs: FileSystem, root: Path,
                                 name: String): ChainState = {
@@ -1123,53 +1288,17 @@ object Manifest {
                                    name: String): Seq[String] =
     chainState(fs, root, name).names
 
-  private def chainDirs(fs: FileSystem, root: Path,
-                        name: String): Seq[String] =
-    manifestChain(fs, root, name)
-      .map(n => new Path(new Path(root, ManifestsDir), n).toString)
-
-  private def readSnapshotByName(spark: SparkSession, root: Path,
-                                 name: String): Snapshot = {
-    import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(conf)
-    val st = chainState(fs, root, name)
-    val dirs = st.names
-      .map(n => new Path(new Path(root, ManifestsDir), n).toString)
-    // venue switch, same budget as planning: below it the chain decodes
-    // driver-side with zero Spark jobs; above it the distributed
-    // chokepoint collects (its driver heap argument is unchanged)
-    val bytes = dirs.map(d => fs.listStatus(new Path(d))
-      .filter(_.isFile).map(_.getLen).sum).sum
-    val all: Seq[Entry] =
-      if (bytes < localReadBudget(spark))
-        readEntriesLocalParquet(conf, dirs, st.removedPaths)
-      else paddedManifest(spark, dirs, st.removedPaths)
-        .as[Entry].collect().toSeq
-    val sentinel = all.find(e => e.path.isEmpty && e.schema_ddl.nonEmpty)
-      .getOrElse(throw new IllegalStateException(
-        s"manifest $name has no schema sentinel"))
-    Snapshot(all.filter(_.path.nonEmpty), sentinel.schema_ddl,
-      sentinel.stat_cols, sentinel.bloom_cols,
-      sentinel.dv_dirs ++ st.dvDirs, sentinel.constraints, name,
-      colMap = if (st.colMap.nonEmpty) st.colMap else sentinel.values)
-  }
-
   /** Lightweight snapshot HEADER: the sentinel's configuration plus
     * the manifest chain's locations and on-disk size — everything
     * planning needs to decide HOW to plan, without collecting a single
-    * file entry. One pointer read, one LIST + base-probe per chain
-    * link, one filter-pushdown read of the sentinel row; cost is
-    * O(manifest files), never O(entries) driver heap.
-    * `manifestDirs` is base-first; the last element is the committed
-    * tip ([[Snapshot.name]]'s dir). */
-  /** `dvDirs` is the EFFECTIVE set (root sentinel's ++ those attached
-    * along the chain); `chainDvDirs` is the chain-attached subset — a
-    * linked writer re-emits it cumulatively into the next base file. */
-  /** `chainColMap` is the chain-attached column-map override (empty =
-    * none) — a linked writer re-emits it cumulatively into the next
-    * base file, exactly like `chainDvDirs`; `colMap` is the EFFECTIVE
-    * map (chain override when present, else the sentinel's). */
+    * file entry. `manifestDirs` is base-first; the last element is the
+    * committed tip ([[Snapshot.name]]'s dir). `dvDirs` is the EFFECTIVE
+    * set (root sentinel's ++ those attached along the chain);
+    * `chainDvDirs` is the chain-attached subset — a linked writer
+    * re-emits it cumulatively into the next base file. `chainColMap` is
+    * the chain-attached column-map override (empty = none), re-emitted
+    * exactly like `chainDvDirs`; `colMap` is the EFFECTIVE map (chain
+    * override when present, else the sentinel's). */
   private[graft] case class SnapshotMeta(ddl: String, statsCols: Seq[String],
                                          bloomCols: Seq[String],
                                          dvDirs: Seq[String],
@@ -1182,33 +1311,27 @@ object Manifest {
                                          colMap: Seq[String] = Nil,
                                          chainColMap: Seq[String] = Nil)
 
-  /** On-disk size of the committed manifest chain itself (NOT the
-    * data) — the cheap proxy [[graft.plans.ManifestScan.scan]] uses to
-    * choose its planning venue. One pointer read + one LIST per chain
-    * link; no Spark job. */
-  private[graft] def manifestBytes(spark: SparkSession, dir: String,
-                                   v: Option[Long] = None): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val ver = v.orElse(latestVersion(spark, dir))
-      .getOrElse(throw new IllegalArgumentException(s"no table at $dir"))
-    chainDirs(fs, root, readPointer(fs, root, ver))
-      .map(d => fs.listStatus(new Path(d)).filter(_.isFile)
-        .map(_.getLen).sum).sum
-  }
-
   /** Bounded per-JVM memo of [[snapshotMeta]]'s manifest-derived parts,
     * keyed by (root, MANIFEST NAME). Sound because a committed manifest
     * dir `m-<uuid>` is immutable (names are never reused; links only
     * ever ADD new dirs with new names), so the header derived from it —
     * sentinel config, chain state, on-disk bytes — is a pure function
     * of the name. A lifecycle (create → refresh → upsert → … ) resolves
-    * the SAME snapshot header several times per op (planner, change
-    * feed from/to, commit gate); each repeat used to re-pay the chain
-    * reads plus a whole Spark `head` job for the sentinel row. The
-    * pointer read itself (version → name) stays uncached — it is the
-    * mutable step. Delta caches its Snapshot the same way. */
+    * the SAME snapshot header several times per op (planner venue
+    * choice, snapshot load, change feed from/to, commit gate); each
+    * repeat used to re-pay the chain reads plus a whole Spark `head` job
+    * for the sentinel row. The pointer read itself (version → name)
+    * stays uncached — it is the mutable step. Delta caches its Snapshot
+    * the same way. */
   private val snapshotMetaCache = new Lru[String, SnapshotMeta](64)
 
+  /** The header of `dir` at version `v` (or latest): one pointer read,
+    * then — on a memo miss — one base-file read, one LIST per chain link
+    * (the chain's on-disk bytes, the proxy every venue choice sizes on)
+    * and the chain ROOT's sentinel sidecar. A root without the sidecar
+    * (older manifests, or a sidecar write that failed) falls back to the
+    * authoritative parquet sentinel row, one Spark job. Cost is
+    * O(manifest files), never O(entries) driver heap. */
   private[graft] def snapshotMeta(spark: SparkSession, dir: String,
                                   v: Option[Long] = None): SnapshotMeta = {
     import spark.implicits._
@@ -1216,6 +1339,8 @@ object Manifest {
     val ver = v.orElse(latestVersion(spark, dir))
       .getOrElse(throw new IllegalArgumentException(s"no table at $dir"))
     val lines = readPointerLines(fs, root, ver)
+    // a pending multi-commit pointer is not a committed version: time
+    // travel to it would read a snapshot that never happened
     require(pointerVisible(fs, lines),
       s"version $ver at $root is a pending multi-table commit, not committed")
     val name = lines.head.trim
@@ -1226,10 +1351,7 @@ object Manifest {
       .map(n => new Path(new Path(root, ManifestsDir), n).toString)
     val bytes = dirs.map(d => fs.listStatus(new Path(d))
       .filter(_.isFile).map(_.getLen).sum).sum
-    // sentinel from the chain ROOT's JSON sidecar (zero Spark jobs);
-    // older manifests without one fall back to the parquet row
-    val sentinel = readSentinelFile(fs,
-      new Path(new Path(root, ManifestsDir), st.names.head))
+    val sentinel = readSentinelFile(fs, new Path(dirs.head))
       .getOrElse(paddedManifest(spark, dirs, Nil)
         .filter(col("path") === "" && col("schema_ddl") =!= "")
         .as[Entry].head())
@@ -1243,18 +1365,32 @@ object Manifest {
   }
 
   /** The snapshot's file entries as a DISTRIBUTED dataset (sentinel
-    * excluded) — the planning input for
-    * [[graft.plans.DistributedManifestFileIndex]], which prunes on
-    * executors and collects only the surviving paths instead of
-    * materializing O(entries) [[ManifestEntry]] objects on the
-    * driver. */
-  private[graft] def entriesDataset(spark: SparkSession,
-                                    meta: SnapshotMeta)
+    * excluded; `removes` subtracted on top of the chain's own) — the
+    * planning input for [[graft.plans.DistributedManifestFileIndex]],
+    * which prunes on executors and collects only the surviving paths
+    * instead of materializing O(entries) [[ManifestEntry]] objects on
+    * the driver. */
+  private[graft] def entriesDataset(spark: SparkSession, meta: SnapshotMeta,
+                                    removes: Seq[String] = Nil)
       : org.apache.spark.sql.Dataset[ManifestEntry] = {
     import spark.implicits._
-    paddedManifest(spark, meta.manifestDirs, meta.removedPaths)
+    paddedManifest(spark, meta.manifestDirs, meta.removedPaths ++ removes)
       .filter(col("path") =!= "").as[ManifestEntry]
   }
+
+  /** The snapshot's file entries (sentinel excluded; `removes`
+    * subtracted on top of the chain's own) collected on the driver —
+    * the ONE full-entry read, and the one place its venue is chosen:
+    * under [[localReadBudget]] the chain decodes driver-side with zero
+    * Spark jobs ([[readEntriesLocalParquet]]); at or past it the
+    * distributed chokepoint collects. Always an O(1)-indexed Seq. */
+  private[graft] def entries(spark: SparkSession, meta: SnapshotMeta,
+                             removes: Seq[String] = Nil): Seq[Entry] =
+    if (meta.manifestBytes < localReadBudget(spark))
+      readEntriesLocalParquet(spark.sparkContext.hadoopConfiguration,
+        meta.manifestDirs, meta.removedPaths ++ removes)
+        .filter(_.path.nonEmpty)
+    else entriesDataset(spark, meta, removes).collect().toSeq
 
   /** Write-amplification ledger for one snapshot transition:
     * `carried*` counts files present in BOTH versions (carried by
@@ -1566,7 +1702,7 @@ object Manifest {
       val v = latestVersion(spark, dir).getOrElse(return)
       if (v % interval != 0) return
       if (fs.exists(checkpointPath(root, v))) return
-      if (manifestBytes(spark, dir, Some(v)) <
+      if (snapshotMeta(spark, dir, Some(v)).manifestBytes <
         conf.getLong(CheckpointMinBytesKey, CheckpointMinBytesDefault)) return
       if (conf.getBoolean(CheckpointAsyncKey, false)) {
         // detached: the commit already landed and the checkpoint is a
@@ -2200,13 +2336,12 @@ object Manifest {
     val merged = stageExt()
     // `_ext` lands BEFORE the pointer: a committed clone can never be
     // read without its map (a crash in between leaves garbage a
-    // re-clone overwrites, never a half-table). Distributed re-root
-    // staging, exactly a compaction's (the source manifest chain reads
-    // fine from here — its dirs are absolute); no delta sidecar: its
-    // parent link would name a source manifest this root does not
-    // retain.
-    val name = compactManifest(spark, dstRoot, meta, meta.ddl, Nil,
-      writeSidecar = false)
+    // re-clone overwrites, never a half-table). Re-root staging, exactly
+    // a compaction's (the source manifest chain reads fine from here —
+    // its dirs are absolute); no delta sidecar: its parent link would
+    // name a source manifest this root does not retain.
+    val name = compactManifest(spark, dstRoot, meta,
+      sentinelOf(meta, meta.dvDirs), Nil, writeSidecar = false)
     commit(fsD, dstRoot, 1L, name, op = "CLONE")
     // post-commit verification (fence 3): if a loser's stale overwrite
     // slipped in, re-merge OUR mappings back over whatever is there
@@ -2502,32 +2637,6 @@ object Manifest {
     try urlDec(s.replace("+", "%2B"))
     catch { case _: IllegalArgumentException => s }
 
-  /** [[writeManifest]]'s DISTRIBUTED twin for table-birth commits whose
-    * entry set is already a DataFrame ([[convert]] adopting 10⁷
-    * files): sentinel ∪ entries straight to parquet, sized like a
-    * compaction — the per-file list never visits the driver. */
-  private[graft] def writeManifestDist(spark: SparkSession, root: Path,
-                                       entriesDf: DataFrame, ddl: String,
-                                       statsCols: Seq[String],
-                                       nEntries: Long): String = {
-    import spark.implicits._
-    val name = s"m-${UUID.randomUUID()}"
-    val dir = new Path(new Path(root, ManifestsDir), name).toString
-    val sentinel = ManifestEntry("", Seq.empty,
-      has_null = false, overflow = false, rows = 0L, bytes = 0L,
-      schema_ddl = ddl, stat_cols = statsCols,
-      stat_mins = Seq.empty, stat_maxs = Seq.empty,
-      bloom_cols = Seq.empty, dv_dirs = Seq.empty,
-      constraints = Seq.empty)
-    // ~120 B per slim entry on disk — the compaction sizing yardstick
-    val nFiles = math.max(1L, nEntries * 120L / ManifestTargetBytes).toInt
-    Seq(sentinel).toDF().unionByName(entriesDf)
-      .coalesce(nFiles).write.parquet(dir)
-    writeSentinelFile(root.getFileSystem(
-      spark.sparkContext.hadoopConfiguration), new Path(dir), sentinel)
-    name
-  }
-
   /** Top-level nullable rendering (nullability is not a parquet
     * round-trip invariant, so the table schema is recorded nullable). */
   private def nullableDdl(s: StructType): String =
@@ -2596,51 +2705,49 @@ object Manifest {
   private val dvDecodeCache = new Lru[String, (Long, Vector[DvEntry])](
     64, maxWeight = DvCacheMaxRows, weight = _._2.size.toLong)
 
-  /** One DV dir's on-disk bytes + decoded rows, memoized; None when the
-    * physical shape is unexpected (caller falls back to distributed). */
-  private def dvDecodeDir(fs: FileSystem,
-                          conf: org.apache.hadoop.conf.Configuration,
-                          root: Path, d: String)
-      : Option[(Long, Vector[DvEntry])] = {
-    val key = s"$root#$d"
-    dvDecodeCache.get(key).orElse {
-      val files = fs.listStatus(new Path(new Path(root, DvDir), d))
-        .filter(st => st.isFile && st.getLen > 0 &&
-          !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-        .sortBy(_.getPath.getName)
-      val bytes = files.iterator.map(_.getLen).sum
-      val out = Vector.newBuilder[DvEntry]
-      var ok = true
-      files.foreach { st =>
-        if (ok) {
-          val reader = org.apache.parquet.hadoop.ParquetReader
-            .builder(
-              new org.apache.parquet.hadoop.example.GroupReadSupport(),
-              st.getPath)
-            .withConf(conf).build()
-          try {
-            var g = reader.read()
-            while (g != null && ok) {
-              // both fields are written non-null (from readWithPos's
-              // metadata columns); any other shape → distributed
-              if (g.getFieldRepetitionCount("path") == 0 ||
-                  g.getFieldRepetitionCount("pos") == 0) ok = false
-              else out += DvEntry(
-                g.getBinary("path", 0).toStringUsingUTF8,
-                g.getLong("pos", 0))
-              g = reader.read()
-            }
-          } finally reader.close()
-        }
-      }
-      if (!ok) None
-      else {
-        val v = (bytes, out.result())
-        dvDecodeCache.put(key, v)
-        Some(v)
+  /** Whether DV dir `d` of the table at `dir` sits in the decode memo. */
+  private[ops] def dvDecodeCached(dir: String, d: String): Boolean =
+    dvDecodeCache.get(s"${new Path(dir)}#$d").isDefined
+
+  /** One DV dir's parquet parts, name-ordered. */
+  private def dvParts(fs: FileSystem, root: Path,
+                      d: String): Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(new Path(new Path(root, DvDir), d))
+      .filter(st => st.isFile && st.getLen > 0 &&
+        !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName).toSeq
+
+  /** The decoded rows of one DV dir's `parts`; None when the physical
+    * shape is unexpected (caller falls back to distributed). */
+  private def dvDecodeParts(conf: org.apache.hadoop.conf.Configuration,
+                            parts: Seq[org.apache.hadoop.fs.FileStatus])
+      : Option[Vector[DvEntry]] = {
+    val out = Vector.newBuilder[DvEntry]
+    var ok = true
+    parts.foreach { st =>
+      if (ok) {
+        val reader = org.apache.parquet.hadoop.ParquetReader
+          .builder(
+            new org.apache.parquet.hadoop.example.GroupReadSupport(),
+            st.getPath)
+          .withConf(conf).build()
+        try {
+          var g = reader.read()
+          while (g != null && ok) {
+            // both fields are written non-null (from readWithPos's
+            // metadata columns); any other shape → distributed
+            if (g.getFieldRepetitionCount("path") == 0 ||
+                g.getFieldRepetitionCount("pos") == 0) ok = false
+            else out += DvEntry(
+              g.getBinary("path", 0).toStringUsingUTF8,
+              g.getLong("pos", 0))
+            g = reader.read()
+          }
+        } finally reader.close()
       }
     }
+    if (ok) Some(out.result()) else None
   }
 
   /** The DV local venue's OWN byte gate, much tighter than the manifest
@@ -2662,7 +2769,11 @@ object Manifest {
     * (touched-path discovery, the mask relation of every read). Zero
     * Spark jobs under the budget; `None` past it (or on any unexpected
     * physical shape), sending the caller to the distributed read
-    * unchanged. Parity is spec-pinned (DvLocalReadSpec). */
+    * unchanged. The gate is checked on sizes alone — memoized dirs
+    * from the memo, the rest from one LIST each — BEFORE any decode: a
+    * set past the break-even goes distributed without first paying the
+    * serial decode the gate exists to avoid. Parity is spec-pinned
+    * (DvLocalReadSpec). */
   private def dvLocalEntries(spark: SparkSession, root: Path,
                              dvDirs: Seq[String]): Option[Seq[DvEntry]] =
     try {
@@ -2671,12 +2782,38 @@ object Manifest {
       if (budget < 0L) None // pinned distributed
       else {
         val fs = root.getFileSystem(conf)
-        val decoded = dvDirs.map(d => dvDecodeDir(fs, conf, root, d))
-        if (decoded.exists(_.isEmpty) ||
-            decoded.iterator.flatten.map(_._1).sum >= budget) None
-        else Some(decoded.iterator.flatten.flatMap(_._2).toVector)
+        val sized = dvDirs.map { d =>
+          val key = s"$root#$d"
+          dvDecodeCache.get(key) match {
+            case Some((bytes, rows)) => (key, bytes, Left(rows))
+            case None =>
+              val parts = dvParts(fs, root, d)
+              (key, parts.iterator.map(_.getLen).sum, Right(parts))
+          }
+        }
+        if (sized.iterator.map(_._2).sum >= budget) None
+        else {
+          val decoded = sized.map {
+            case (_, _, Left(rows)) => Some(rows)
+            case (key, bytes, Right(parts)) =>
+              val rows = dvDecodeParts(conf, parts)
+              rows.foreach(r => dvDecodeCache.put(key, (bytes, r)))
+              rows
+          }
+          if (decoded.exists(_.isEmpty)) None
+          else Some(decoded.iterator.flatten.flatten.toVector)
+        }
       }
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The distributed read of the DV dirs — the venue past the local
+    * gate. */
+  private def dvRead(spark: SparkSession, root: Path,
+                     dvDirs: Seq[String]): DataFrame =
+    spark.read
+      .schema(org.apache.spark.sql.Encoders.product[DvEntry].schema)
+      .parquet(dvDirs.map(d =>
+        new Path(new Path(root, DvDir), d).toString): _*)
 
   /** The union of the snapshot's deletion-vector relations (empty
     * DataFrame of (path, pos) when the snapshot has none). Under the
@@ -2689,10 +2826,7 @@ object Manifest {
     if (dvDirs.isEmpty) spark.emptyDataset[DvEntry].toDF()
     else dvLocalEntries(spark, root, dvDirs) match {
       case Some(rows) => spark.createDataset(rows).toDF()
-      case None => spark.read
-        .schema(org.apache.spark.sql.Encoders.product[DvEntry].schema)
-        .parquet(dvDirs.map(d =>
-          new Path(new Path(root, DvDir), d).toString): _*)
+      case None => dvRead(spark, root, dvDirs)
     }
   }
 
@@ -2704,12 +2838,8 @@ object Manifest {
     if (dvDirs.isEmpty) Set.empty
     else dvLocalEntries(spark, root, dvDirs) match {
       case Some(rows) => rows.iterator.map(_.path).toSet
-      case None =>
-        localDistinctStrings(spark.read
-          .schema(org.apache.spark.sql.Encoders.product[DvEntry].schema)
-          .parquet(dvDirs.map(d =>
-            new Path(new Path(root, DvDir), d).toString): _*)
-          .select(col("path"))).flatten.toSet
+      case None => localDistinctStrings(
+        dvRead(spark, root, dvDirs).select(col("path"))).flatten.toSet
     }
 
   /** ONE-JOB distinct of `df`'s single STRING column: per-partition
@@ -3242,8 +3372,7 @@ object Manifest {
         if (l.equalsIgnoreCase(from)) (to, p) else (l, p)
       }
       commit(fs, root, v + 1,
-        commitColMap(spark, fs, root, meta,
-          out.map { case (l, p) => s"$l=$p" }),
+        commitColMap(spark, fs, root, meta, out),
         op = "RENAME_COLUMN")
     }
   }
@@ -3251,16 +3380,14 @@ object Manifest {
   /** Stage a COLUMN-MAP commit: an O(1) chain link carrying the new
     * map as `colmap:` lines when the chain has headroom (the metadata-
     * only promise of rename/drop/undrop held at ANY entry count —
-    * nothing entry-sized stages), else the distributed re-root that
-    * resets the chain anyway (which absorbs the map into the fresh
-    * sentinel). */
+    * nothing entry-sized stages), else the re-root that resets the
+    * chain anyway (which absorbs the map into the fresh sentinel) —
+    * [[stageManifest]]'s choice. `pairs` are (logical, physical). */
   private def commitColMap(spark: SparkSession, fs: FileSystem, root: Path,
                            meta: SnapshotMeta,
-                           mapOut: Seq[String]): String =
-    if (linkedAppendEligible(spark, fs, meta))
-      linkManifest(spark, fs, root, meta, Nil, colMapOut = Some(mapOut))
-    else compactManifest(spark, root, meta, meta.ddl, Nil,
-      colMapOut = Some(mapOut))
+                           pairs: Seq[(String, String)]): String =
+    stageManifest(spark, fs, root, meta, Nil,
+      colMapOut = Some(pairs.map { case (l, p) => s"$l=$p" }))
 
   /** DROP COLUMN — the same sentinel-only, metadata-only commit: the
     * physical slot stays in the files (and null-fills in later writes,
@@ -3302,8 +3429,7 @@ object Manifest {
       }
       val out = pairs.filterNot(_._1.equalsIgnoreCase(name))
       commit(fs, root, v + 1,
-        commitColMap(spark, fs, root, meta,
-          out.map { case (l, p) => s"$l=$p" }),
+        commitColMap(spark, fs, root, meta, out),
         op = "DROP_COLUMN")
     }
   }
@@ -3458,8 +3584,7 @@ object Manifest {
         s"column $as already exists")
       val out = pairs :+ ((as, slot))
       commit(fs, root, v + 1,
-        commitColMap(spark, fs, root, meta,
-          out.map { case (l, p) => s"$l=$p" }),
+        commitColMap(spark, fs, root, meta, out),
         op = "UNDROP_COLUMN")
     }
   }
@@ -3537,8 +3662,8 @@ object Manifest {
     val entries = writeBatch(spark, root, df, partitionCol, statsCols,
       constraints = Nil, bloomCols = bloomCols)
     commit(fs, root, 1L,
-      writeManifest(spark, root, entries, nullableDdl(df.schema), statsCols,
-        bloomCols, dvDirs = Nil, constraints = Nil),
+      writeManifest(spark, root,
+        sentinelEntry(nullableDdl(df.schema), statsCols, bloomCols), entries),
       txn, op = "CREATE")
   }
 
@@ -3672,209 +3797,17 @@ object Manifest {
       // unchanged — no partition-disjointness needed (readless gate);
       // under multi-writer ingest the staged batch commits without
       // ever re-staging
-      def stage(m: SnapshotMeta): String =
-        if (linkedAppendEligible(spark, fs, m))
-          linkManifest(spark, fs, root, m, entries)
-        else compactManifest(spark, root, m, m.ddl, entries)
-      commitRebasing(spark, fs, root, dir, meta, v, stage, txn,
-        op = "APPEND", readPaths = Set.empty, wanted = Set.empty,
-        wantNull = false, renderSafe = true, readless = true)
+      commitRebasing(spark, fs, root, dir, meta, v,
+        stageManifest(spark, fs, root, _, entries), txn, op = "APPEND",
+        readPaths = Set.empty, wanted = Set.empty, wantNull = false,
+        renderSafe = true, readless = true)
     } else
       // a mergeSchema widen changes the sentinel — never rebased
       commit(fs, root, v + 1,
-        compactManifest(spark, root, meta, ddlOut, entries),
+        compactManifest(spark, root, meta,
+          sentinelOf(meta, meta.dvDirs).copy(schema_ddl = ddlOut), entries),
         txn, op = "APPEND")
     maybeCheckpoint(spark, dir, pCol)
-  }
-
-  /** A LINKED append writes only the batch's entries plus a base
-    * pointer — O(batch), not O(table). Eligible when (a) the chain has
-    * headroom ([[AppendMaxChainKey]] — at the cap the append compacts,
-    * which re-roots the chain); and (b) the parent chain's PHYSICAL parquet
-    * schema matches this writer's [[ManifestEntry]] encoder exactly —
-    * a chain must read as ONE uniform relation, and mixing an
-    * old-library manifest (missing a column) with a new part would
-    * leave schema inference to whichever footer Spark samples. Guard
-    * (b) reads one footer; all links passed it inductively at their
-    * own write, so checking the chain ROOT covers the chain. */
-  private def linkedAppendEligible(spark: SparkSession, fs: FileSystem,
-                                   meta: SnapshotMeta): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    if (meta.manifestDirs.length >=
-      conf.getLong(AppendMaxChainKey, AppendMaxChainDefault)) return false
-    val want = org.apache.spark.sql.Encoders.product[ManifestEntry].schema
-    val got = org.apache.spark.sql.GraftParquetBridge
-      .localInferSchema(spark, meta.manifestDirs.head)
-      .getOrElse(return false)
-    got.fields.map(f => (f.name, f.dataType)).toSeq ==
-      want.fields.map(f => (f.name, f.dataType)).toSeq
-  }
-
-  /** Stage the O(batch) linked manifest: one small parquet part with
-    * the batch's slim entries, the [[BaseFile]] carrying the FULL
-    * cumulative chain state (ancestors base-first + every path removed
-    * along the chain + this commit's `removes`, trailer-guarded so a
-    * torn write can never silently resurrect rows), and the delta
-    * sidecar (tail replay works across linked commits unchanged). The
-    * dir is an orphan until the caller's pointer create lands — a
-    * crash anywhere here leaves vacuum-reclaimable garbage, never a
-    * readable partial manifest. */
-  private def linkManifest(spark: SparkSession, fs: FileSystem, root: Path,
-                           meta: SnapshotMeta, adds: Seq[Entry],
-                           removes: Seq[String] = Nil,
-                           dvAdds: Seq[String] = Nil,
-                           colMapOut: Option[Seq[String]] = None): String = {
-    val name = s"m-${UUID.randomUUID()}"
-    val dst = new Path(new Path(root, ManifestsDir), name)
-    val slim = adds.map(e => e.copy(schema_ddl = "", stat_cols = Seq.empty,
-      bloom_cols = Seq.empty, dv_dirs = Seq.empty,
-      constraints = Seq.empty))
-    // driver-side single-part write — the same encoder +
-    // ParquetWriteSupport pipeline that wrote the parent chain, so the
-    // physical schemas stay identical; no Spark job for a few KB
-    if (slim.nonEmpty) writeEntriesLocal(spark, dst, slim)
-    else fs.mkdirs(dst)
-    val tip = new Path(meta.manifestDirs.last).getName
-    val chain = meta.manifestDirs.map(d => new Path(d).getName)
-    val allRemoves = meta.removedPaths ++ removes
-    val allDvs = meta.chainDvDirs ++ dvAdds
-    // the column map rides the chain like the DV set: cumulative
-    // re-emission of the attached override, replaced wholesale by a
-    // rename/drop/undrop commit (colMapOut)
-    val cmap = colMapOut.getOrElse(meta.chainColMap)
-    val lines = chain.map(n => s"base:$n") ++
-      allRemoves.map(r => s"remove:$r") ++ allDvs.map(d => s"dv:$d") ++
-      cmap.map(c => s"colmap:$c")
-    val out = fs.create(new Path(dst, BaseFile), false)
-    try out.write((lines.mkString("\n") + s"\nend:${lines.size}\n")
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    // delta sidecar, same economics rule as [[writeDelta]] (entry
-    // count estimated from chain bytes — the rule is economic, not
-    // correctness: an oversized replay is just slower than the scan)
-    val estEntries = math.max(1L, meta.manifestBytes / 64)
-    if (slim.size + removes.size <= math.max(4096, estEntries / 8))
-      try writeDeltaFile(spark, root, name,
-        ManifestDelta(tip, slim, removes))
-      catch {
-        case scala.util.control.NonFatal(t) =>
-          System.err.println(s"[graft] delta sidecar for $name skipped: $t")
-      }
-    name
-  }
-
-  /** Compact (re-root) the manifest chain DISTRIBUTEDLY: sentinel +
-    * batch adds unioned with the parent chain's entry relation, written
-    * as a fresh self-contained manifest sized to [[ManifestTargetBytes]]
-    * per part. Driver heap stays O(batch) — the parent's entries flow
-    * executor-to-executor. Serves three append shapes: the chain cap,
-    * a mergeSchema widening (new sentinel DDL), and a parent whose
-    * physical schema predates this library (the rewrite pads it
-    * uniform). */
-  private def compactManifest(spark: SparkSession, root: Path,
-                              meta: SnapshotMeta, ddlOut: String,
-                              adds: Seq[Entry],
-                              removes: Seq[String] = Nil,
-                              dvAdds: Seq[String] = Nil,
-                              constraintsOut: Option[Seq[String]] = None,
-                              colMapOut: Option[Seq[String]] = None,
-                              dvOut: Option[Seq[String]] = None,
-                              bloomColsOut: Option[Seq[String]] = None,
-                              writeSidecar: Boolean = true)
-      : String = {
-    import spark.implicits._
-    val name = s"m-${UUID.randomUUID()}"
-    val dir = new Path(new Path(root, ManifestsDir), name).toString
-    // the re-rooted sentinel absorbs the chain's effective DV set (and
-    // this commit's own), so the fresh chain starts with no dv lines;
-    // `dvOut` overrides the whole set (a DV-retiring commit like
-    // [[materialize]] re-roots with Nil); `values` carries the column
-    // map (see [[writeManifest]])
-    val sentinel = ManifestEntry("", colMapOut.getOrElse(meta.colMap),
-      has_null = false,
-      overflow = false, rows = 0L, bytes = 0L, schema_ddl = ddlOut,
-      stat_cols = meta.statsCols, stat_mins = Seq.empty,
-      stat_maxs = Seq.empty,
-      bloom_cols = bloomColsOut.getOrElse(meta.bloomCols),
-      dv_dirs = dvOut.getOrElse(meta.dvDirs ++ dvAdds),
-      constraints = constraintsOut.getOrElse(meta.constraints))
-    val slim = adds.map(e => e.copy(schema_ddl = "", stat_cols = Seq.empty,
-      bloom_cols = Seq.empty, dv_dirs = Seq.empty,
-      constraints = Seq.empty))
-    val nFiles = math.max(1L,
-      meta.manifestBytes / ManifestTargetBytes).toInt
-    // LOCAL venue for tiny chains (round-17 carry-item 5): when the
-    // parent chain sits under both the driver-read budget and the
-    // single-part size target, the carried-entry union is a few-KB
-    // driver list — decode it locally (same padding + remove
-    // subtraction as the distributed reader) and write the one part
-    // through writeEntriesLocal, zero Spark jobs. Past either bound
-    // the distributed chokepoint below is untouched (its sizing and
-    // heap arguments unchanged). nFiles == 1 in this branch by
-    // construction, so the on-disk shape matches what the distributed
-    // path would have written.
-    if (meta.manifestBytes <
-        math.min(localReadBudget(spark), ManifestTargetBytes)) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = root.getFileSystem(conf)
-      val carriedLocal = readEntriesLocalParquet(conf,
-        meta.manifestDirs, meta.removedPaths ++ removes)
-        .filter(_.path.nonEmpty)
-      writeEntriesLocal(spark, new Path(dir),
-        (sentinel +: slim) ++ carriedLocal)
-      writeSentinelFile(fs, new Path(dir), sentinel)
-    } else {
-    // this commit's own removes ride the same chokepoint subtraction
-    // the chain reader uses (entriesDataset already subtracts the
-    // CHAIN's accumulated removes)
-    val carried =
-      if (removes.isEmpty) entriesDataset(spark, meta).toDF()
-      else paddedManifest(spark, meta.manifestDirs,
-        meta.removedPaths ++ removes).filter(col("path") =!= "")
-    (sentinel +: slim).toDF().unionByName(carried)
-      .coalesce(nFiles).write.parquet(dir)
-    writeSentinelFile(root.getFileSystem(
-      spark.sparkContext.hadoopConfiguration), new Path(dir), sentinel)
-    }
-    val tip = new Path(meta.manifestDirs.last).getName
-    val estEntries = math.max(1L, meta.manifestBytes / 64)
-    if (writeSidecar &&
-      slim.size + removes.size <= math.max(4096, estEntries / 8))
-      try writeDeltaFile(spark, root, name,
-        ManifestDelta(tip, slim, removes))
-      catch {
-        case scala.util.control.NonFatal(t) =>
-          System.err.println(s"[graft] delta sidecar for $name skipped: $t")
-      }
-    name
-  }
-
-  /** Fresh, self-contained manifest: sentinel (from `meta`'s
-    * configuration — schema, stats, blooms, constraints, column map —
-    * with the DV set reset to `dvDirs`) + `adds` only. The
-    * full-REPLACEMENT commit shape ([[overwrite]], [[clusterBy]],
-    * [[commitAll]]'s overwrite writes): nothing carries from the parent,
-    * so staging is O(adds) driver-side with no parent entry
-    * materialization at any table size. No delta sidecar — the change
-    * set IS the table, exactly the case the sidecar economics rule
-    * skips; tail-replay readers fall back to the exact scan. */
-  private def freshManifest(spark: SparkSession, root: Path,
-                            meta: SnapshotMeta, adds: Seq[Entry],
-                            dvDirs: Seq[String] = Nil): String = {
-    import spark.implicits._
-    val name = s"m-${UUID.randomUUID()}"
-    val dir = new Path(new Path(root, ManifestsDir), name).toString
-    val sentinel = ManifestEntry("", meta.colMap, has_null = false,
-      overflow = false, rows = 0L, bytes = 0L, schema_ddl = meta.ddl,
-      stat_cols = meta.statsCols, stat_mins = Seq.empty,
-      stat_maxs = Seq.empty, bloom_cols = meta.bloomCols,
-      dv_dirs = dvDirs, constraints = meta.constraints)
-    val slim = adds.map(e => e.copy(schema_ddl = "", stat_cols = Seq.empty,
-      bloom_cols = Seq.empty, dv_dirs = Seq.empty, constraints = Seq.empty))
-    writeEntriesLocal(spark, new Path(dir), sentinel +: slim)
-    writeSentinelFile(root.getFileSystem(
-      spark.sparkContext.hadoopConfiguration), new Path(dir), sentinel)
-    name
   }
 
   /** Exactly-once append: apply `(appId, batchId)` AT MOST ONCE, in
@@ -4223,7 +4156,8 @@ object Manifest {
     val entries = writeBatch(spark, root, dfP, pCol, meta.statsCols,
       meta.constraints, bloomCols = meta.bloomCols)
     // the whole snapshot is replaced, so every previous DV retires too
-    commit(fs, root, v + 1, freshManifest(spark, root, meta, entries),
+    commit(fs, root, v + 1,
+      writeManifest(spark, root, sentinelOf(meta, Nil), entries),
       txn, op = "OVERWRITE")
   }
 
@@ -4359,14 +4293,9 @@ object Manifest {
       }
       val removes = cands.map(_.path)
       val adds = keptEntries ++ newEntries
-      // the cumulative remove set rides every future listing's base
-      // read — once it stops being small, re-rooting is cheaper
-      val name =
-        if (linkedAppendEligible(spark, fs, meta) &&
-          meta.removedPaths.size + removes.size <= LinkedRemovesCap)
-          linkManifest(spark, fs, root, meta, adds, removes)
-        else compactManifest(spark, root, meta, meta.ddl, adds, removes)
-      commit(fs, root, v + 1, name, txn, op = "OVERWRITE_PARTITIONS")
+      commit(fs, root, v + 1,
+        stageManifest(spark, fs, root, meta, adds, removes), txn,
+        op = "OVERWRITE_PARTITIONS")
       pCol
     }
     maybeCheckpoint(spark, dir, pColOut)
@@ -4423,8 +4352,9 @@ object Manifest {
                 s"stats column $c not in ${w.df.columns.mkString(",")}"))
             val e = writeBatch(spark, root, w.df, w.partitionCol,
               w.statsCols, w.constraints, bloomCols = w.bloomCols)
-            (0L, writeManifest(spark, root, e, nullableDdl(w.df.schema),
-              w.statsCols, w.bloomCols, Seq.empty[String], w.constraints))
+            (0L, writeManifest(spark, root, sentinelEntry(
+              nullableDdl(w.df.schema), w.statsCols, w.bloomCols,
+              constraints = w.constraints), e))
           case Some(v) =>
             require(w.statsCols.isEmpty && w.bloomCols.isEmpty &&
               w.constraints.isEmpty,
@@ -4443,10 +4373,9 @@ object Manifest {
             val e = writeBatch(spark, root, w.df, w.partitionCol,
               meta.statsCols, meta.constraints, bloomCols = meta.bloomCols)
             val name =
-              if (w.overwrite) freshManifest(spark, root, meta, e)
-              else if (linkedAppendEligible(spark, fs, meta))
-                linkManifest(spark, fs, root, meta, e)
-              else compactManifest(spark, root, meta, meta.ddl, e)
+              if (w.overwrite)
+                writeManifest(spark, root, sentinelOf(meta, Nil), e)
+              else stageManifest(spark, fs, root, meta, e)
             (v, name)
         }
       (fs, root, v + 1, name)
@@ -4640,15 +4569,13 @@ object Manifest {
         "integral→decimal(p,0)) — rewrite the table (overwrite) for " +
         "anything else")
     val bloomOut =
-      if (meta.bloomCols.exists(_.equalsIgnoreCase(p)) &&
-        !isHashStableWidening(f.dataType, to))
-        Some(meta.bloomCols.filterNot(_.equalsIgnoreCase(p)))
-      else None
+      if (isHashStableWidening(f.dataType, to)) meta.bloomCols
+      else meta.bloomCols.filterNot(_.equalsIgnoreCase(p))
     val widened = StructType(schema.fields.map(g =>
       if (g.name.equalsIgnoreCase(p)) g.copy(dataType = to) else g))
     commit(fs, root, v + 1,
-      compactManifest(spark, root, meta, nullableDdl(widened), Nil,
-        bloomColsOut = bloomOut),
+      compactManifest(spark, root, meta, sentinelOf(meta, meta.dvDirs).copy(
+        schema_ddl = nullableDdl(widened), bloom_cols = bloomOut), Nil),
       op = "WIDEN_COLUMN")
   }
 
@@ -4696,8 +4623,9 @@ object Manifest {
       else Some((pairs ++ bound.map { case (n, p, _) => (n, p) })
         .map { case (l, p) => s"$l=$p" })
     commit(fs, root, v + 1,
-      compactManifest(spark, root, meta, nullableDdl(widened), Nil,
-        colMapOut = mapOut), op = "ADD_COLUMNS")
+      compactManifest(spark, root, meta, sentinelOf(meta, meta.dvDirs).copy(
+        schema_ddl = nullableDdl(widened),
+        values = mapOut.getOrElse(meta.colMap)), Nil), op = "ADD_COLUMNS")
   }
 
   /** Row-level CHANGE FEED between two committed versions — the CDC
@@ -5283,7 +5211,8 @@ object Manifest {
     val (nTotal, fulls, maybes, allFull) =
       deleteWhereTiers(spark, meta, pCol, sqlP)
     if (allFull) {
-      commit(fs, root, v + 1, freshManifest(spark, root, meta, Nil),
+      commit(fs, root, v + 1,
+        writeManifest(spark, root, sentinelOf(meta, Nil), Nil),
         op = "DELETE_WHERE")
       maybeCheckpoint(spark, dir, pCol)
       return Map("files_dropped" -> nTotal, "files_rewritten" -> 0L)
@@ -5303,12 +5232,9 @@ object Manifest {
         finally kept.unpersist()
       }
     val removes = (fulls ++ maybes).map(_.path)
-    val name =
-      if (linkedAppendEligible(spark, fs, meta) &&
-        meta.removedPaths.size + removes.size <= LinkedRemovesCap)
-        linkManifest(spark, fs, root, meta, newEntries, removes)
-      else compactManifest(spark, root, meta, meta.ddl, newEntries, removes)
-    commit(fs, root, v + 1, name, op = "DELETE_WHERE")
+    commit(fs, root, v + 1,
+      stageManifest(spark, fs, root, meta, newEntries, removes),
+      op = "DELETE_WHERE")
     maybeCheckpoint(spark, dir, pCol)
     Map("files_dropped" -> fulls.size.toLong,
       "files_rewritten" -> maybes.size.toLong)
@@ -5334,7 +5260,8 @@ object Manifest {
     val (nTotal, fulls, maybes, allFull) =
       deleteWhereTiers(spark, meta, pCol, sqlP)
     if (allFull) {
-      commit(fs, root, v + 1, freshManifest(spark, root, meta, Nil),
+      commit(fs, root, v + 1,
+        writeManifest(spark, root, sentinelOf(meta, Nil), Nil),
         op = "DELETE_WHERE_MOR")
       maybeCheckpoint(spark, dir, pCol)
       return Map("files_dropped" -> nTotal, "files_masked" -> 0L)
@@ -5355,13 +5282,8 @@ object Manifest {
     val removes = fulls.map(_.path)
     if (dvName.isEmpty && removes.isEmpty)
       return Map("files_dropped" -> 0L, "files_masked" -> 0L)
-    val name =
-      if (linkedAppendEligible(spark, fs, meta) &&
-        meta.removedPaths.size + removes.size <= LinkedRemovesCap)
-        linkManifest(spark, fs, root, meta, Nil, removes,
-          dvAdds = dvName.toSeq)
-      else compactManifest(spark, root, meta, meta.ddl, Nil, removes,
-        dvAdds = dvName.toSeq)
+    val name = stageManifest(spark, fs, root, meta, Nil, removes,
+      dvAdds = dvName.toSeq)
     commit(fs, root, v + 1, name, op = "DELETE_WHERE_MOR")
     maybeCheckpoint(spark, dir, pCol)
     Map("files_dropped" -> fulls.size.toLong,
@@ -5445,7 +5367,8 @@ object Manifest {
       val newEntries = writeBatch(spark, root,
         applySet(schema, setP, Some(matchCond))(rows), pCol,
         meta.statsCols, meta.constraints, bloomCols = meta.bloomCols)
-      commit(fs, root, v + 1, freshManifest(spark, root, meta, newEntries),
+      commit(fs, root, v + 1,
+        writeManifest(spark, root, sentinelOf(meta, Nil), newEntries),
         op = "UPDATE_WHERE")
       maybeCheckpoint(spark, dir, pCol)
       return Map("files_rewritten" -> nTotal, "files_untouched" -> 0L)
@@ -5461,13 +5384,9 @@ object Manifest {
         writeBatch(spark, root, rewritten, pCol, meta.statsCols,
           meta.constraints, bloomCols = meta.bloomCols)
       val removes = cands.map(_.path)
-      val name =
-        if (linkedAppendEligible(spark, fs, meta) &&
-          meta.removedPaths.size + removes.size <= LinkedRemovesCap)
-          linkManifest(spark, fs, root, meta, newEntries, removes)
-        else compactManifest(spark, root, meta, meta.ddl, newEntries,
-          removes)
-      commit(fs, root, v + 1, name, op = "UPDATE_WHERE")
+      commit(fs, root, v + 1,
+        stageManifest(spark, fs, root, meta, newEntries, removes),
+        op = "UPDATE_WHERE")
     } finally rewritten.unpersist()
     maybeCheckpoint(spark, dir, pCol)
     Map("files_rewritten" -> cands.size.toLong,
@@ -5517,13 +5436,8 @@ object Manifest {
       val newEntries = writeBatch(spark, root,
         applySet(schema, setP, None)(matched.drop("__rel", "__pos")),
         pCol, meta.statsCols, meta.constraints, bloomCols = meta.bloomCols)
-      val name =
-        if (linkedAppendEligible(spark, fs, meta))
-          linkManifest(spark, fs, root, meta, newEntries,
-            dvAdds = dvName.toSeq)
-        else compactManifest(spark, root, meta, meta.ddl, newEntries,
-          dvAdds = dvName.toSeq)
-      commit(fs, root, v + 1, name, op = "UPDATE_WHERE_MOR")
+      commit(fs, root, v + 1, stageManifest(spark, fs, root, meta,
+        newEntries, dvAdds = dvName.toSeq), op = "UPDATE_WHERE_MOR")
     } finally matched.unpersist()
     maybeCheckpoint(spark, dir, pCol)
     Map("files_masked" -> cands.size.toLong)
@@ -5813,13 +5727,8 @@ object Manifest {
           toPhysicalFull(newRows, meta.colMap, meta.ddl), pColP,
           meta.statsCols, meta.constraints, bloomCols = meta.bloomCols)
         if (newEntries.nonEmpty || dvName.nonEmpty) {
-          val name =
-            if (linkedAppendEligible(spark, fs, meta))
-              linkManifest(spark, fs, root, meta, newEntries,
-                dvAdds = dvName.toSeq)
-            else compactManifest(spark, root, meta, meta.ddl, newEntries,
-              dvAdds = dvName.toSeq)
-          commit(fs, root, v + 1, name, op = "MERGE")
+          commit(fs, root, v + 1, stageManifest(spark, fs, root, meta,
+            newEntries, dvAdds = dvName.toSeq), op = "MERGE")
           maybeCheckpoint(spark, dir, pColP)
         }
         out
@@ -5938,13 +5847,9 @@ object Manifest {
         // rebasable like upsertMor: the standalone DV dir re-links onto
         // a disjoint winner's tip; interleaved DV changes abort via the
         // config compare
-        def stage(m: SnapshotMeta): String =
-          if (linkedAppendEligible(spark, fs, m))
-            linkManifest(spark, fs, root, m, Nil, dvAdds = Seq(name))
-          else compactManifest(spark, root, m, m.ddl, Nil,
-            dvAdds = Seq(name))
-        commitRebasing(spark, fs, root, dir, meta, v, stage, txn = None,
-          op = "DELETE_MOR", readPaths = cands.map(_.path).toSet,
+        commitRebasing(spark, fs, root, dir, meta, v,
+          stageManifest(spark, fs, root, _, Nil, dvAdds = Seq(name)),
+          txn = None, op = "DELETE_MOR", readPaths = cands.map(_.path).toSet,
           wanted = touched.flatten.toSet, wantNull = touched.contains(None),
           renderSafe = partitionValuesSafe(meta.ddl, pCol))
       }
@@ -6021,14 +5926,10 @@ object Manifest {
         // name) re-link onto a disjoint winner's tip; an interleaved
         // DV change aborts via the sentinel-config compare inside the
         // gate (our hit positions were computed against the old set)
-        def stage(m: SnapshotMeta): String =
-          if (linkedAppendEligible(spark, fs, m))
-            linkManifest(spark, fs, root, m, newEntries,
-              dvAdds = dvName.toSeq)
-          else compactManifest(spark, root, m, m.ddl, newEntries,
-            dvAdds = dvName.toSeq)
-        commitRebasing(spark, fs, root, dir, meta, v, stage, txn = None,
-          op = "UPSERT_MOR", readPaths = cands.map(_.path).toSet,
+        commitRebasing(spark, fs, root, dir, meta, v,
+          stageManifest(spark, fs, root, _, newEntries,
+            dvAdds = dvName.toSeq), txn = None, op = "UPSERT_MOR",
+          readPaths = cands.map(_.path).toSet,
           wanted = touched.flatten.toSet, wantNull = touched.contains(None),
           renderSafe = partitionValuesSafe(meta.ddl, pCol))
       }
@@ -6066,8 +5967,8 @@ object Manifest {
       // only inert vectors (their files already rewritten): drop them;
       // every entry carries over through the chain subtraction
       commit(fs, root, v + 1,
-        compactManifest(spark, root, meta, meta.ddl, Nil,
-          dvOut = Some(Nil)), op = "MATERIALIZE")
+        compactManifest(spark, root, meta, sentinelOf(meta, Nil), Nil),
+        op = "MATERIALIZE")
       return 0L
     }
     val rewritten = readEntriesMasked(spark, root, dvd, meta.ddl,
@@ -6076,8 +5977,8 @@ object Manifest {
       physName(meta.colMap, partitionCol), meta.statsCols,
       meta.constraints, bloomCols = meta.bloomCols)
     commit(fs, root, v + 1,
-      compactManifest(spark, root, meta, meta.ddl, newEntries,
-        removes = dvd.map(_.path), dvOut = Some(Nil)),
+      compactManifest(spark, root, meta, sentinelOf(meta, Nil), newEntries,
+        dvd.map(_.path)),
       op = "MATERIALIZE")
     dvd.size.toLong
   }
@@ -6157,12 +6058,8 @@ object Manifest {
       // are inert from here on (they match no live file), rows on kept
       // files still mask
       val removes = cands.map(_.path)
-      def stage(m: SnapshotMeta): String =
-        if (linkedAppendEligible(spark, fs, m) &&
-          m.removedPaths.size + removes.size <= LinkedRemovesCap)
-          linkManifest(spark, fs, root, m, newEntries, removes)
-        else compactManifest(spark, root, m, m.ddl, newEntries, removes)
-      commitRebasing(spark, fs, root, dir, meta, v, stage, txn, op,
+      commitRebasing(spark, fs, root, dir, meta, v,
+        stageManifest(spark, fs, root, _, newEntries, removes), txn, op,
         readPaths = removes.toSet, wanted = wanted, wantNull = wantNull,
         renderSafe = partitionValuesSafe(meta.ddl, pCol))
       maybeCheckpoint(spark, dir, pCol)
@@ -6294,12 +6191,10 @@ object Manifest {
   private def partitionCandidates(spark: SparkSession, meta: SnapshotMeta,
                                   partitionCol: String, wanted: Set[String],
                                   wantNull: Boolean): Seq[Entry] = {
-    // driver-local venue under the planning budget (zero Spark jobs);
-    // the predicate is the same either way
+    // driver-local venue under the planning budget ([[entries]]' local
+    // decode, zero Spark jobs); the predicate is the same either way
     if (meta.manifestBytes < localReadBudget(spark)) {
-      val live = readEntriesLocalParquet(
-        spark.sparkContext.hadoopConfiguration, meta.manifestDirs,
-        meta.removedPaths).filter(_.path.nonEmpty)
+      val live = entries(spark, meta)
       if (partitionValuesSafe(meta.ddl, partitionCol))
         live.filter(e => e.overflow || e.values.exists(wanted.contains) ||
           (wantNull && e.has_null))
@@ -6359,12 +6254,9 @@ object Manifest {
       meta.statsCols, meta.constraints,
       numFiles = Some(nOut), bloomCols = meta.bloomCols)
     val removes = small.map(_.path)
-    val name =
-      if (linkedAppendEligible(spark, fs, meta) &&
-        meta.removedPaths.size + removes.size <= LinkedRemovesCap)
-        linkManifest(spark, fs, root, meta, newEntries, removes)
-      else compactManifest(spark, root, meta, meta.ddl, newEntries, removes)
-    commit(fs, root, v + 1, name, op = "COMPACT")
+    commit(fs, root, v + 1,
+      stageManifest(spark, fs, root, meta, newEntries, removes),
+      op = "COMPACT")
     maybeCheckpoint(spark, dir, pCol)
     small.size.toLong
   }
@@ -6407,8 +6299,8 @@ object Manifest {
     val viol = existing.filter(!p && p.isNotNull).count()
     if (viol > 0) throw ConstraintViolationException(name, sqlP, viol)
     commit(fs, root, v + 1,
-      compactManifest(spark, root, meta, meta.ddl, Nil,
-        constraintsOut = Some(meta.constraints :+ s"$name: $sqlP")),
+      compactManifest(spark, root, meta, sentinelOf(meta, meta.dvDirs)
+        .copy(constraints = meta.constraints :+ s"$name: $sqlP"), Nil),
       op = "ADD_CONSTRAINT")
   }
 
@@ -6426,8 +6318,9 @@ object Manifest {
     require(kept.size < meta.constraints.size,
       s"no constraint named '$name'")
     commit(fs, root, v + 1,
-      compactManifest(spark, root, meta, meta.ddl, Nil,
-        constraintsOut = Some(kept)), op = "DROP_CONSTRAINT")
+      compactManifest(spark, root, meta,
+        sentinelOf(meta, meta.dvDirs).copy(constraints = kept), Nil),
+      op = "DROP_CONSTRAINT")
   }
 
   /** The table's CHECK constraints as (name, sql) pairs — snapshot
@@ -6497,7 +6390,8 @@ object Manifest {
         meta.statsCols, meta.constraints, numFiles = Some(nOut),
         bloomCols = meta.bloomCols,
         clusterKey = Some(key(meta, clusterP)))
-    commit(fs, root, v + 1, freshManifest(spark, root, meta, newEntries),
+    commit(fs, root, v + 1,
+      writeManifest(spark, root, sentinelOf(meta, Nil), newEntries),
       op = "CLUSTER")
   }
 
@@ -6755,13 +6649,9 @@ object Manifest {
             meta.constraints, numFiles = Some(nOut),
             bloomCols = meta.bloomCols, clusterKey = Some(zkey))
         val removes = newE.map(_.path)
-        val name =
-          if (linkedAppendEligible(spark, fs, meta) &&
-            meta.removedPaths.size + removes.size <= LinkedRemovesCap)
-            linkManifest(spark, fs, root, meta, newEntries, removes)
-          else compactManifest(spark, root, meta, meta.ddl, newEntries,
-            removes)
-        commit(fs, root, v + 1, name, op = "CLUSTER_INCR")
+        commit(fs, root, v + 1,
+          stageManifest(spark, fs, root, meta, newEntries, removes),
+          op = "CLUSTER_INCR")
         maybeCheckpoint(spark, dir, pColP)
         pin(spark, dir, ClusterWatermarkPin, v + 1)
         newE.size.toLong
@@ -6806,12 +6696,8 @@ object Manifest {
         meta.constraints, numFiles = Some(nOut), bloomCols = meta.bloomCols,
         clusterKey = Some(zkey))
     val removes = cands.map(_.path)
-    def stage(m: SnapshotMeta): String =
-      if (linkedAppendEligible(spark, fs, m) &&
-        m.removedPaths.size + removes.size <= LinkedRemovesCap)
-        linkManifest(spark, fs, root, m, newEntries, removes)
-      else compactManifest(spark, root, m, m.ddl, newEntries, removes)
-    commitRebasing(spark, fs, root, dir, meta, v, stage, txn = None,
+    commitRebasing(spark, fs, root, dir, meta, v,
+      stageManifest(spark, fs, root, _, newEntries, removes), txn = None,
       op = "CLUSTER_WHERE", readPaths = removes.toSet,
       wanted = values.toSet, wantNull = false, renderSafe = true)
     maybeCheckpoint(spark, dir, pCol)
@@ -6970,7 +6856,7 @@ object Manifest {
           (a1 + c1, a2 + c2)
         }
       // effective DV set = base sentinel's ++ chain-attached, exactly
-      // [[readSnapshotByName]]'s composition
+      // [[snapshotMeta]]'s composition
       val (sentDv, sentC) = sentinels.getOrElse(st.names.head, (0L, 0L))
       (v, f - st.removedPaths.size, r - rmR, b - rmB,
         sentDv + st.dvDirs.size, sentC, txn)

@@ -89,12 +89,18 @@ object Streaming {
     override def onQueryProgress(event: QueryProgressEvent): Unit = ()
 
     override def onQueryTerminated(event: QueryTerminatedEvent): Unit = {
-      val status = if (event.exception.isDefined) "FAILED" else "SUCCEEDED"
-      writeStatusRecord(statusDir, s"${event.runId}.json", Seq(
-        "query_id" -> event.id.toString,
-        "run_id" -> event.runId.toString,
-        "status" -> status,
-        "exception" -> event.exception.orNull))
+      val file = s"${event.runId}.json"
+      // a record that already exists is the budget watchdog's FAILED one,
+      // written before its `stop()` (a runId is never reused): the
+      // termination that stop caused must not replace it
+      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(statusDir, file))) {
+        val status = if (event.exception.isDefined) "FAILED" else "SUCCEEDED"
+        writeStatusRecord(statusDir, file, Seq(
+          "query_id" -> event.id.toString,
+          "run_id" -> event.runId.toString,
+          "status" -> status,
+          "exception" -> event.exception.orNull))
+      }
     }
   }
 
@@ -120,6 +126,13 @@ object Streaming {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
+  /** How long [[enforceBudget]] waits, past the deadline, for a job in
+    * the query's group before it stops the query directly: long enough
+    * for a batch that is about to submit its next job (and for the
+    * status tracker, which learns of jobs through the listener bus), so
+    * a batch in its Spark phase fails through the cancellation. */
+  private val IdleStopMillis = 1000L
+
   /** Enforce a wall-clock budget on a running streaming query — the
     * runtime half of the reference's 300 s `TimeoutSeconds`
     * (`/root/reference/StateMachine.txt:31,68`: Step Functions KILLS an
@@ -129,33 +142,42 @@ object Streaming {
     * so cancelling that group fails the in-flight batch; the query
     * then terminates with the cancellation exception and the
     * registered [[StatusFileListener]] writes the terminal FAILED
-    * record, exactly like any other query failure. If the query
-    * stays active (idle between batches, or in driver-side work that no
-    * job group reaches, such as a sink writing driver-resident rows),
-    * it is stopped directly — `stop()` interrupts the batch — and the
-    * FAILED record is written here; either way a durable terminal
-    * record exists.
+    * record, exactly like any other query failure. Once the group has
+    * had no running job for [[IdleStopMillis]] (the query is idle
+    * between batches, or in driver-side work that no job group
+    * reaches, such as a sink writing driver-resident rows), the FAILED
+    * record is written here and the query is stopped directly —
+    * `stop()` interrupts the batch. The listener keeps that record: the
+    * clean stop it observes next must not read as SUCCEEDED. Either way
+    * a durable terminal FAILED record exists.
     *
     * Returns the watchdog thread; `interrupt()` it when the query
     * finishes inside its budget. */
   def enforceBudget(spark: SparkSession, query: StreamingQuery,
                     budgetMillis: Long, statusDir: String): Thread = {
-    val t = new Thread(() => {
+    val t = new Thread(() =>
       // an interrupt at any point = the query finished inside budget
-      val interrupted =
-        try { Thread.sleep(budgetMillis); false }
-        catch { case _: InterruptedException => true }
-      if (!interrupted && query.isActive) {
+      try {
+        Thread.sleep(budgetMillis)
         val group = query.runId.toString
+        val tracker = spark.sparkContext.statusTracker
+        def running = tracker.getJobIdsForGroup(group).exists(id =>
+          tracker.getJobInfo(id)
+            .exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING))
+        // cancel the group's jobs while it has any (the batch then fails
+        // with the cancellation); a group idle for IdleStopMillis has no
+        // job left to fail the query with
         val deadline = System.currentTimeMillis() + 10000
-        var onTime = false
-        while (!onTime && query.isActive &&
-               System.currentTimeMillis() < deadline) {
-          spark.sparkContext.cancelJobGroup(group)
-          try Thread.sleep(100)
-          catch { case _: InterruptedException => onTime = true }
+        var idleSince = System.currentTimeMillis()
+        while (query.isActive && System.currentTimeMillis() < deadline &&
+               System.currentTimeMillis() - idleSince < IdleStopMillis) {
+          if (running) {
+            spark.sparkContext.cancelJobGroup(group)
+            idleSince = System.currentTimeMillis()
+          }
+          Thread.sleep(100)
         }
-        if (!onTime && query.isActive) { // idle query: no job to fail it with
+        if (query.isActive) {
           Streaming.writeStatusRecord(statusDir, s"${query.runId}.json", Seq(
             "query_id" -> query.id.toString,
             "run_id" -> query.runId.toString,
@@ -163,8 +185,8 @@ object Streaming {
             "exception" -> s"budget of $budgetMillis ms exceeded (stopped by watchdog)"))
           query.stop()
         }
-      }
-    }, s"graft-stream-watchdog-${query.runId}")
+      } catch { case _: InterruptedException => () },
+      s"graft-stream-watchdog-${query.runId}")
     t.setDaemon(true)
     t.start()
     t

@@ -636,7 +636,9 @@ object ManifestScan {
     * driver collect's retained heap (421 MB measured) stops being
     * free. Override per session with
     * `graft.manifest.planning.distributedMinBytes` in the Hadoop conf
-    * (set -1 to force distributed, Long.MaxValue to pin driver-side). */
+    * (set -1 to force distributed, Long.MaxValue to pin driver-side);
+    * read in one place, [[graft.ops.Manifest.localReadBudget]], so every
+    * metadata read picks its venue by the same budget. */
   val DistributedMinBytesKey = "graft.manifest.planning.distributedMinBytes"
   val DistributedMinBytesDefault: Long = 128L << 20
 
@@ -705,13 +707,11 @@ object ManifestScan {
                              partitionCol: Option[String] = None,
                              version: Option[Long] = None)
       : (HadoopFsRelation, Seq[String], Seq[String]) = {
-    val threshold = spark.sparkContext.hadoopConfiguration
-      .getLong(DistributedMinBytesKey, DistributedMinBytesDefault)
-    // the venue decision costs one pointer read + one LIST — no Spark
-    // job, no entry materialization
-    val mBytes = Manifest.manifestBytes(spark, dir, version)
+    // the venue decision reads the memoized snapshot header (the index
+    // below resolves the same one) — no entry materialization
+    val mBytes = Manifest.snapshotMeta(spark, dir, version).manifestBytes
     val (index: FileIndex, schema, dvDirs, colMap) =
-      if (mBytes >= threshold || threshold < 0) {
+      if (mBytes >= Manifest.localReadBudget(spark)) {
         val i = new DistributedManifestFileIndex(spark, dir, partitionCol,
           version)
         (i, i.dataSchema, i.meta.dvDirs, i.meta.colMap)

@@ -19,6 +19,16 @@ class NoRenameFileSystem extends RawLocalFileSystem {
   override def rename(src: Path, dst: Path): Boolean = false
 }
 
+/** Local fs whose `rename` fails only onto a directory named
+  * `compacted` — the last step of [[Sinks.compactParquet]]'s swap —
+  * while every rename of the compaction's own write succeeds. */
+class NoCompactSwapFileSystem extends RawLocalFileSystem {
+  override def getScheme: String = "nocompactswapfs"
+  override def getUri: java.net.URI = java.net.URI.create("nocompactswapfs:///")
+  override def rename(src: Path, dst: Path): Boolean =
+    dst.getName != "compacted" && super.rename(src, dst)
+}
+
 class SinksSpec extends SparkSpec {
   import spark.implicits._
 
@@ -246,5 +256,21 @@ class SinksSpec extends SparkSpec {
     assert(fileCount == n && n < 64, s"expected few compacted files, got $n")
     val back = spark.read.parquet(dir).as[Long].collect().sorted
     assert(back.sameElements(1L to 1000L), "compaction must preserve every row")
+  }
+
+  test("compactParquet throws naming both paths when the swap rename fails") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.nocompactswapfs.impl", classOf[NoCompactSwapFileSystem].getName)
+    val dir = Files.createTempDirectory("graft-compact-fail").toString + "/compacted"
+    (1L to 100L).toDF("id").repartition(4).write.parquet(dir)
+    val e = intercept[java.io.IOException] {
+      Sinks.compactParquet(spark, s"nocompactswapfs://$dir")
+    }
+    assert(e.getMessage.contains(s"${dir}_compacting into ") &&
+      e.getMessage.endsWith(dir), e.getMessage)
+    // the rows survive where the failed swap left them
+    val kept = spark.read.parquet(s"${dir}_compacting").as[Long].collect().sorted
+    assert(kept.sameElements(1L to 100L))
   }
 }

@@ -57,6 +57,28 @@ class DvLocalReadSpec extends SparkSpec {
       "MoR upsert must replace under both venues")
   }
 
+  test("a vector past the 64 KB gate reads distributed without a driver decode") {
+    val dir = Files.createTempDirectory("graft-dvlocal-big").toString + "/tbl"
+    Manifest.create(spark, dir, spark.range(0, 100000).select($"id".as("k"),
+      ($"id" * 1.0).as("v"), ($"id" % 4).as("p")), "p")
+    // every other row: one vector of 50k (path, pos) rows
+    Manifest.deleteMor(spark, dir, spark.range(0, 100000, 2)
+      .select($"id".as("k"), ($"id" % 4).as("p")), Seq("k"), "p")
+    val dv = Manifest.loadSnapshot(spark, dir).dvDirs
+    assert(dv.size == 1)
+    val dvBytes = Files.walk(java.nio.file.Paths.get(dir, "_dv", dv.head))
+      .filter(p => p.getFileName.toString.endsWith(".parquet"))
+      .mapToLong(p => Files.size(p)).sum()
+    assert(dvBytes > (64L << 10), s"setup: the vector is only $dvBytes bytes")
+    // default budget: the 64 KB DV gate applies
+    val gated = readAll(dir)
+    val dist = withBudget(-1L)(readAll(dir))
+    assert(gated == dist, "DV venues disagree on the masked read")
+    assert(gated.size == 50000 && gated.forall(_.head.asInstanceOf[Long] % 2 == 1))
+    assert(!Manifest.dvDecodeCached(dir, dv.head),
+      "a vector past the gate must not be decoded on the driver")
+  }
+
   test("materialize folds the same file set under both venues") {
     val dirA = mkTable()
     val dirB = mkTable()

@@ -2,6 +2,8 @@ package graft.ops
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -41,7 +43,7 @@ class ManifestLocalReadSpec extends SparkSpec {
       ($"id" * 2.0).as("v"), ($"id" % 5).cast("string").as("p")), "p")
     val versions = Manifest.versions(spark, dir)
     assert(versions.size >= 4)
-    versions.foreach { v =>
+    def everyVersion(dir: String): Seq[Manifest.Snapshot] = versions.map { v =>
       val local = withBudget(Long.MaxValue)(
         Manifest.loadSnapshot(spark, dir, Some(v)))
       val dist = withBudget(-1L)(
@@ -52,6 +54,26 @@ class ManifestLocalReadSpec extends SparkSpec {
         local.bloomCols == dist.bloomCols &&
         local.constraints == dist.constraints &&
         local.dvDirs == dist.dvDirs && local.colMap == dist.colMap)
+      local
+    }
+    val withSidecars = everyVersion(dir)
+    // the same table without its sentinel sidecars (older manifests, or a
+    // sidecar write that failed): the header falls back to the parquet
+    // sentinel row. A copy under a fresh root, so no memoized header of
+    // the original answers for it.
+    val bare = Files.createTempDirectory("graft-localread-bare").toString + "/tbl"
+    val src = java.nio.file.Paths.get(dir)
+    Files.walk(src).iterator().asScala.foreach { p =>
+      val to = java.nio.file.Paths.get(bare).resolve(src.relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(to)
+      else if (!p.getFileName.toString.contains("_graft_sentinel")) Files.copy(p, to)
+    }
+    assert(Files.walk(src).iterator().asScala
+      .exists(_.getFileName.toString == "_graft_sentinel"))
+    val withoutSidecars = everyVersion(bare)
+    withSidecars.zip(withoutSidecars).foreach { case (a, b) =>
+      assert(a.entries.sortBy(_.path) == b.entries.sortBy(_.path) &&
+        a.copy(entries = Nil) == b.copy(entries = Nil))
     }
     // and the two venues answer reads identically
     val a = withBudget(Long.MaxValue)(

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.StreamingQueryException
+import org.apache.spark.sql.streaming.{StreamingQueryException, StreamingQueryListener}
 
 import graft.{RawFixture, SparkSpec}
 import graft.io.Sinks
@@ -143,12 +143,26 @@ class WatchdogSpec extends SparkSpec {
     val (raw, work) = stagedDrop()
     val before = rawFiles(raw)
     val puts = WatchdogSpec.blockedPuts.get
+    val statusDir = s"$work/status"
+    val listener = Streaming.withStatusListener(spark, statusDir)
+    // registered after the status listener, and the bus hands each event
+    // to its listeners in registration order: once this one has seen the
+    // termination, the status listener has handled it too
+    val terminated = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val probe = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(event: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(event: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(event: QueryTerminatedEvent): Unit =
+        terminated.add(event.runId.toString)
+    }
+    spark.streams.addListener(probe)
     // the KPI rows are put from the driver, where no job group reaches
     // them: the query must still stop
     val budget = 8000L
     val t0 = System.currentTimeMillis()
     val q = Streaming.runAvailableNow(spark, raw, work, WatchdogSpec.blockingKv, 0L)
-    val wd = Streaming.enforceBudget(spark, q, budget, s"$work/status")
+    val wd = Streaming.enforceBudget(spark, q, budget, statusDir)
     try {
       try q.awaitTermination(60000)
       catch { case _: StreamingQueryException => () }
@@ -156,12 +170,24 @@ class WatchdogSpec extends SparkSpec {
       assert(!q.isActive, "the over-budget query is still running")
       val late = System.currentTimeMillis() - t0 - budget
       assert(late < 20000, s"the query stopped $late ms after the deadline")
+      assert(late < 3000, s"the query stopped $late ms after the deadline")
       assert(WatchdogSpec.blockedPuts.get > puts, "the budget expired before the KV sink ran")
       assert(rawFiles(raw) == before)
       assert(!Files.exists(java.nio.file.Paths.get(s"$work/archive")))
+      val deadline = System.currentTimeMillis() + 10000
+      while (!terminated.contains(q.runId.toString) &&
+             System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(terminated.contains(q.runId.toString), "no termination event")
+      val records = Streaming.readStatuses(statusDir)
+        .filter(_.get("run_id").contains(q.runId.toString))
+      assert(records.size == 1 && records.head.get("status").contains("FAILED") &&
+        records.head.get("exception").exists(_.contains("budget")),
+        s"the watchdog's FAILED record must survive the stop: $records")
     } finally {
       q.stop()
       if (wd.isAlive) wd.interrupt()
+      spark.streams.removeListener(listener)
+      spark.streams.removeListener(probe)
     }
   }
 
