@@ -648,6 +648,19 @@ object Manifest {
 
   private type Entry = ManifestEntry
 
+  /** The encoders of the driver-written manifest and bloom parts,
+    * derived once per JVM rather than once per commit: a derivation
+    * walks the case class through Scala reflection. An encoder is
+    * immutable; each write takes its own serializer. */
+  private lazy val entryEncoder = productEncoder[ManifestEntry]
+  private lazy val bloomEncoder = productEncoder[BloomEntry]
+
+  private def productEncoder[T <: Product : scala.reflect.runtime.universe.TypeTag]
+      : org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[T] =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(
+      org.apache.spark.sql.Encoders.product[T]
+        .asInstanceOf[org.apache.spark.sql.catalyst.encoders.AgnosticEncoder[T]])
+
   /** One committed snapshot: live file entries, table schema, the
     * stats/bloom column configuration, and the live deletion-vector
     * dirs (all carried by the sentinel). `name` is the manifest's
@@ -725,16 +738,12 @@ object Manifest {
     * BIG entry relations stays on [[writeManifestDist]]. */
   private def writeEntriesLocal(spark: SparkSession, dir: Path,
                                 entries: Seq[Entry]): Unit = {
-    val enc = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(
-      org.apache.spark.sql.Encoders.product[ManifestEntry]
-        .asInstanceOf[org.apache.spark.sql.catalyst.encoders
-          .AgnosticEncoder[ManifestEntry]])
-    val ser = enc.createSerializer()
+    val ser = entryEncoder.createSerializer()
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(dir)
     val file = new Path(dir, s"part-00000-${UUID.randomUUID()}.parquet")
     org.apache.spark.sql.GraftParquetBridge.writeLocalParquet(
-      spark, enc.schema, entries.iterator.map(ser(_)), file.toString)
+      spark, entryEncoder.schema, entries.iterator.map(ser(_)), file.toString)
   }
 
   // -------- manifest staging --------
@@ -868,7 +877,7 @@ object Manifest {
                             removes: Seq[String] = Nil,
                             dvAdds: Seq[String] = Nil,
                             colMapOut: Option[Seq[String]] = None): String = {
-    val want = org.apache.spark.sql.Encoders.product[ManifestEntry].schema
+    val want = entryEncoder.schema
     def uniform = org.apache.spark.sql.GraftParquetBridge
       .localInferSchema(spark, meta.manifestDirs.head)
       .exists(got => got.fields.map(f => (f.name, f.dataType)).toSeq ==
@@ -1193,7 +1202,7 @@ object Manifest {
       .localInferSchema(spark, manifestDirs.head)
       .map(sc => spark.read.schema(sc).parquet(manifestDirs: _*))
       .getOrElse(spark.read.parquet(manifestDirs: _*))
-    val want = org.apache.spark.sql.Encoders.product[ManifestEntry].schema
+    val want = entryEncoder.schema
     val padded = want.fields.foldLeft(raw) { (df, f) =>
       if (df.columns.contains(f.name)) df
       else df.withColumn(f.name, (f.dataType match {
@@ -1742,11 +1751,18 @@ object Manifest {
 
   /** Write `df` as a fresh immutable batch and return its entries.
     * Rows are clustered by the partition column so per-file value sets
-    * stay tight (one shuffle — the price of pruning on every later
-    * rewrite); stats — partition-value sets, null flag, row count,
-    * min/max per stat column, bloom bitsets — and the CHECK-constraint
-    * verdicts are collected by the write job itself, in the same pass,
-    * never from path names. A batch that violates a constraint throws
+    * stay tight: a shuffle, the price of pruning on every later rewrite.
+    * It runs for a multi-partition or adaptive input and for a single
+    * split larger than one coalesced partition. A small one-split input
+    * skips it ([[writesAsOneFile]]): AQE would coalesce that shuffle
+    * back into one task writing one file, so the shuffle only adds a
+    * job. A streaming micro-batch is that shape, so its append runs one
+    * write job, and the rows of its file keep their input order.
+    *
+    * Stats — partition-value sets, null flag, row count, min/max per
+    * stat column, bloom bitsets — and the CHECK-constraint verdicts are
+    * collected by the write job itself, in the same pass, never from
+    * path names. A batch that violates a constraint throws
     * [[ConstraintViolationException]] before any manifest exists.
     *
     * `numFiles` (compaction's bin-packing knob) additionally spreads
@@ -1775,7 +1791,8 @@ object Manifest {
         df.repartitionByRange(k).sortWithinPartitions(k)
       case (None, Some(n)) => df.repartition(n, col(partitionCol),
         pmod(xxhash64(df.columns.map(col).toIndexedSeq: _*), lit(n.toLong)))
-      case (None, None) => df.repartition(col(partitionCol))
+      case (None, None) =>
+        if (writesAsOneFile(spark, df)) df else df.repartition(col(partitionCol))
     }
     // stats are collected DURING the write through a
     // WriteJobStatsTracker (the Delta-log mechanism), so the batch is
@@ -1812,6 +1829,39 @@ object Manifest {
       nullableDdl(df.schema))
   }
 
+  /** True when `df`'s clustering shuffle would coalesce back into ONE
+    * task writing one file, so skipping it leaves the layout unchanged:
+    * AQE coalesces shuffle partitions, `df`'s physical plan has no
+    * exchange (it is not adaptive) and one partition, and its size
+    * estimate is within what `CoalesceShufflePartitions` packs into one
+    * partition — Spark's `minPartitionSize`, or the advisory size too
+    * when the rule's minimum partition count is 1 (`parallelismFirst`
+    * off, or one core). `execute()` of an exchange-free plan only
+    * builds its RDD (no job); `df.rdd` is not used, because under AQE
+    * it runs the input's shuffle stages. */
+  private def writesAsOneFile(spark: SparkSession, df: DataFrame): Boolean = {
+    import org.apache.spark.sql.internal.SQLConf
+    val conf = spark.sessionState.conf
+    lazy val plan = df.queryExecution.executedPlan
+    lazy val oneFileBytes = {
+      val minSize = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+      val minParts = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_NUM)
+        .getOrElse(if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
+          spark.sparkContext.defaultParallelism else 1)
+      if (minParts <= 1)
+        math.max(minSize, conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+      else minSize
+    }
+    conf.adaptiveExecutionEnabled && conf.coalesceShufflePartitionsEnabled &&
+      plan.find {
+        case _: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec |
+             _: org.apache.spark.sql.execution.exchange.Exchange => true
+        case _ => false
+      }.isEmpty &&
+      df.queryExecution.optimizedPlan.stats.sizeInBytes <= oneFileBytes &&
+      plan.execute().getNumPartitions == 1
+  }
+
   /** Probe expressions for the one-pass write stats, in the layout
     * [[org.apache.spark.sql.GraftWriteBridge.GraftBatchStatsTracker]]
     * expects: partition value cast to string, raw stat columns,
@@ -1834,7 +1884,7 @@ object Manifest {
         parsed.map { case (_, sql) =>
           when(!coalesce(expr(sql), lit(true)), 1L).otherwise(0L) }
     val dummy = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
     val project = dummy.select(probeCols: _*).queryExecution.analyzed
       .collectFirst {
         case pr: org.apache.spark.sql.catalyst.plans.logical.Project => pr
@@ -1903,15 +1953,11 @@ object Manifest {
             st.bloomWords(ci).toSeq.padTo(BloomBits / 64, 0L))
         }
       }
-      val bEnc = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(
-        org.apache.spark.sql.Encoders.product[BloomEntry]
-          .asInstanceOf[org.apache.spark.sql.catalyst.encoders
-            .AgnosticEncoder[BloomEntry]])
-      val bSer = bEnc.createSerializer()
+      val bSer = bloomEncoder.createSerializer()
       val bDir = new Path(batchDir, BloomDir)
       fs.mkdirs(bDir)
       org.apache.spark.sql.GraftParquetBridge.writeLocalParquet(
-        spark, bEnc.schema,
+        spark, bloomEncoder.schema,
         bloomRows.iterator.map(bSer(_)),
         new Path(bDir, s"part-00000-${UUID.randomUUID()}.parquet").toString)
     }

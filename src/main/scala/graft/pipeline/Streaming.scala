@@ -590,7 +590,12 @@ object Streaming {
     * micro-batch, and compaction/vacuum run concurrently under the same
     * optimistic-concurrency protocol — none of which the `_batch=<id>`
     * directory layout offers. Empty batches skip entirely: replaying an
-    * empty batch is already a no-op, so there is nothing to mark. */
+    * empty batch is already a no-op, so there is nothing to mark.
+    *
+    * Jobs per batch: the `isEmpty` probe, then, for a non-empty batch,
+    * the append's write job. A small micro-batch (one input split) is
+    * written without the clustering shuffle, as one file, so those two
+    * are all it runs; a multi-split batch adds the shuffle's map job. */
   def manifestIngest(df: DataFrame, tableDir: String, partitionCol: String,
                      checkpoint: String, appId: String,
                      statsCols: Seq[String] = Nil,
