@@ -950,7 +950,7 @@ object Manifest {
         writeRooted(spark, root, sentinel,
           slimAdds ++ entries(spark, meta, removes))
       else writeRooted(spark, root, sentinel, slimAdds,
-        Some((entriesDataset(spark, meta, removes).toDF(),
+        Some((manifestRelation(spark, meta, removes).toDF(),
           math.max(1L, meta.manifestBytes / ManifestTargetBytes).toInt)))
     if (writeSidecar)
       writeDeltaIfSmall(spark, root, name, meta, slimAdds, removes)
@@ -1140,32 +1140,72 @@ object Manifest {
       strs("bloom_cols"), strs("dv_dirs"), strs("constraints"))
   }
 
-  /** Driver-LOCAL manifest entry read ([[entries]]' venue under the
-    * budget): parquet-mr Group decoding of the chain's part files, zero
-    * Spark jobs — the metadata twin of the driver-resident planning
-    * venue. A distributed read of a few-KB manifest costs a whole Spark
-    * job (several under AQE) per snapshot resolution, and one lifecycle
-    * resolves snapshots dozens of times. Decoding mirrors
-    * [[paddedManifest]]'s forward-compat contract exactly: a column
-    * missing from an old manifest's physical schema pads with its
-    * neutral default ("" / 0 / false / empty list); chain removes are
-    * subtracted here as there. Parity is spec-pinned
-    * (ManifestLocalReadSpec: local == distributed, field for field). */
-  private def readEntriesLocalParquet(conf:
-      org.apache.hadoop.conf.Configuration, manifestDirs: Seq[String],
-      removedPaths: Seq[String]): Seq[Entry] = {
-    val removed = removedPaths.toSet
-    // MUST build an O(1)-indexed Seq: ManifestFileIndex's prune loop
-    // walks entries by index, and a List here turns every pruned
-    // listing O(n²) (776 s measured at 10⁵ entries)
-    val out = Vector.newBuilder[Entry]
-    manifestDirs.foreach { d =>
-      // per-dir FS resolution: a clone's chain can span FILESYSTEMS
-      // (source dirs on the source's scheme), exactly as the
-      // distributed reader resolves each path
-      val fs = new Path(d).getFileSystem(conf)
-      fs.listStatus(new Path(d))
-        .filter(st => st.isFile && st.getLen > 0 &&
+  /** One manifest dir as [[manifestDirCache]] holds it: its on-disk
+    * bytes (every file, sidecars included — what each venue choice
+    * sums) and, once a driver-local read has decoded it, its entries
+    * (sentinel row included; chain removes are a snapshot's, not a
+    * dir's, so they are never subtracted here). */
+  private final case class DirMemo(bytes: Long, entries: Option[Vector[Entry]])
+
+  /** Bounded per-JVM memo of manifest DIRS, keyed by the dir's
+    * qualified URI: the one place a manifest dir is listed and decoded
+    * under [[localReadBudget]]. Sound for the same reason as
+    * [[snapshotMetaCache]]: a committed `m-<uuid>` dir is immutable
+    * (names are never reused, links only ever add new dirs;
+    * ManifestImmutabilitySpec), so its bytes and entries are a pure
+    * function of its URI — a table deleted and re-created at the same
+    * path writes new names, and a clone reading its source's dirs
+    * shares their memo entries. Every lifecycle op re-reads the whole
+    * chain (planning, entry diffs, candidate picks, compaction), and a
+    * chain grows by only a link or two per commit, so each dir is now
+    * listed and decoded once per JVM instead of once per read. Bounded
+    * like [[dvDecodeCache]]: at most 1024 dirs and 2¹⁷ decoded entries
+    * in total; a dir with more entries than that keeps only its bytes
+    * and is decoded per call. */
+  private val DirCacheMaxEntries = 1L << 17
+  private val manifestDirCache = new Lru[String, DirMemo](1024,
+    maxWeight = DirCacheMaxEntries, weight = _.entries.fold(0L)(_.size.toLong))
+
+  /** (hits, misses) of [[manifestDirCache]]'s lookups. */
+  private[graft] def manifestDirMemoStats: (Long, Long) = manifestDirCache.stats
+
+  /** Manifest dir `d`'s memo key: its qualified URI. The file system
+    * is resolved per dir, since a clone's chain can span FILESYSTEMS
+    * (source dirs on the source's scheme). */
+  private def dirKey(conf: org.apache.hadoop.conf.Configuration,
+                     d: String): String = {
+    val p = new Path(d)
+    p.getFileSystem(conf).makeQualified(p).toString
+  }
+
+  private def manifestDirFiles(conf: org.apache.hadoop.conf.Configuration,
+                               d: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val p = new Path(d)
+    p.getFileSystem(conf).listStatus(p).filter(_.isFile).toSeq
+  }
+
+  /** Manifest dir `d`'s on-disk bytes, from the memo or one LIST. */
+  private def manifestDirBytes(conf: org.apache.hadoop.conf.Configuration,
+                               d: String): Long = {
+    val key = dirKey(conf, d)
+    manifestDirCache.get(key).map(_.bytes).getOrElse {
+      val bytes = manifestDirFiles(conf, d).iterator.map(_.getLen).sum
+      manifestDirCache.put(key, DirMemo(bytes, None))
+      bytes
+    }
+  }
+
+  /** Manifest dir `d`'s decoded entries (sentinel included), from the
+    * memo or one LIST plus a parquet-mr Group decode of its data parts
+    * in name order. */
+  private def manifestDirEntries(conf: org.apache.hadoop.conf.Configuration,
+                                 d: String): Vector[Entry] = {
+    val key = dirKey(conf, d)
+    val memo = manifestDirCache.get(key)
+    memo.flatMap(_.entries).getOrElse {
+      val files = manifestDirFiles(conf, d)
+      val out = Vector.newBuilder[Entry]
+      files.filter(st => st.getLen > 0 &&
           !st.getPath.getName.startsWith("_") &&
           !st.getPath.getName.startsWith("."))
         .sortBy(_.getPath.getName)
@@ -1177,12 +1217,43 @@ object Manifest {
           try {
             var g = reader.read()
             while (g != null) {
-              val e = decodeEntry(g)
-              if (removed.isEmpty || !removed.contains(e.path)) out += e
+              out += decodeEntry(g)
               g = reader.read()
             }
           } finally reader.close()
         }
+      val decoded = out.result()
+      val bytes = memo.fold(files.iterator.map(_.getLen).sum)(_.bytes)
+      manifestDirCache.put(key, DirMemo(bytes,
+        Some(decoded).filter(_.size <= DirCacheMaxEntries)))
+      decoded
+    }
+  }
+
+  /** Driver-LOCAL manifest entry read ([[entries]]' venue under the
+    * budget): each chain dir's entries from [[manifestDirCache]] —
+    * decoded with parquet-mr at most once per JVM, zero Spark jobs —
+    * then the chain's removes subtracted. A distributed read of a
+    * few-KB manifest costs a whole Spark job (several under AQE) per
+    * snapshot resolution, and one lifecycle resolves snapshots dozens
+    * of times. Decoding mirrors [[paddedManifest]]'s forward-compat
+    * contract exactly: a column missing from an old manifest's physical
+    * schema pads with its neutral default ("" / 0 / false / empty
+    * list); chain removes are subtracted here as there. Parity is
+    * spec-pinned (ManifestLocalReadSpec: local == distributed, field for
+    * field; ManifestMetadataVenueSpec: memo hits and soundness). */
+  private def readEntriesLocalParquet(conf:
+      org.apache.hadoop.conf.Configuration, manifestDirs: Seq[String],
+      removedPaths: Seq[String]): Seq[Entry] = {
+    val removed = removedPaths.toSet
+    // MUST build an O(1)-indexed Seq: ManifestFileIndex's prune loop
+    // walks entries by index, and a List here turns every pruned
+    // listing O(n²) (776 s measured at 10⁵ entries)
+    val out = Vector.newBuilder[Entry]
+    manifestDirs.foreach { d =>
+      manifestDirEntries(conf, d).foreach { e =>
+        if (removed.isEmpty || !removed.contains(e.path)) out += e
+      }
     }
     out.result()
   }
@@ -1335,8 +1406,9 @@ object Manifest {
   private val snapshotMetaCache = new Lru[String, SnapshotMeta](64)
 
   /** The header of `dir` at version `v` (or latest): one pointer read,
-    * then — on a memo miss — one base-file read, one LIST per chain link
-    * (the chain's on-disk bytes, the proxy every venue choice sizes on)
+    * then — on a memo miss — one base-file read, the chain's on-disk
+    * bytes (the proxy every venue choice sizes on; summed from
+    * [[manifestDirCache]], so only links new to this JVM are LISTed)
     * and the chain ROOT's sentinel sidecar. A root without the sidecar
     * (older manifests, or a sidecar write that failed) falls back to the
     * authoritative parquet sentinel row, one Spark job. Cost is
@@ -1358,8 +1430,8 @@ object Manifest {
     val st = chainState(fs, root, name)
     val dirs = st.names
       .map(n => new Path(new Path(root, ManifestsDir), n).toString)
-    val bytes = dirs.map(d => fs.listStatus(new Path(d))
-      .filter(_.isFile).map(_.getLen).sum).sum
+    val conf = spark.sparkContext.hadoopConfiguration
+    val bytes = dirs.map(manifestDirBytes(conf, _)).sum
     val sentinel = readSentinelFile(fs, new Path(dirs.head))
       .getOrElse(paddedManifest(spark, dirs, Nil)
         .filter(col("path") === "" && col("schema_ddl") =!= "")
@@ -1373,33 +1445,63 @@ object Manifest {
     meta
   }
 
-  /** The snapshot's file entries as a DISTRIBUTED dataset (sentinel
-    * excluded; `removes` subtracted on top of the chain's own) — the
-    * planning input for [[graft.plans.DistributedManifestFileIndex]],
-    * which prunes on executors and collects only the surviving paths
-    * instead of materializing O(entries) [[ManifestEntry]] objects on
-    * the driver. */
-  private[graft] def entriesDataset(spark: SparkSession, meta: SnapshotMeta,
-                                    removes: Seq[String] = Nil)
+  /** The metadata venue rule: a snapshot whose chain is smaller on
+    * disk than [[localReadBudget]] is read on the driver. */
+  private def localVenue(spark: SparkSession, meta: SnapshotMeta): Boolean =
+    meta.manifestBytes < localReadBudget(spark)
+
+  /** The chain's entries as the distributed manifest relation. */
+  private def manifestRelation(spark: SparkSession, meta: SnapshotMeta,
+                               removes: Seq[String])
       : org.apache.spark.sql.Dataset[ManifestEntry] = {
     import spark.implicits._
     paddedManifest(spark, meta.manifestDirs, meta.removedPaths ++ removes)
       .filter(col("path") =!= "").as[ManifestEntry]
   }
 
+  /** The snapshot's file entries as a dataset (sentinel excluded;
+    * `removes` subtracted on top of the chain's own), in the venue
+    * [[localVenue]] picks. Under the budget it is a driver-resident
+    * `LocalRelation` over [[entries]] (memoized per dir, no manifest
+    * scan job, and filters or projections on it fold into the relation
+    * and collect with zero jobs); at or past it, the distributed
+    * manifest relation — the planning input for
+    * [[graft.plans.DistributedManifestFileIndex]], which prunes on
+    * executors and collects only the surviving paths instead of
+    * materializing O(entries) [[ManifestEntry]] objects on the
+    * driver. */
+  private[graft] def entriesDataset(spark: SparkSession, meta: SnapshotMeta,
+                                    removes: Seq[String] = Nil)
+      : org.apache.spark.sql.Dataset[ManifestEntry] =
+    if (localVenue(spark, meta))
+      spark.createDataset(entries(spark, meta, removes))(entryEncoder)
+    else manifestRelation(spark, meta, removes)
+
   /** The snapshot's file entries (sentinel excluded; `removes`
     * subtracted on top of the chain's own) collected on the driver —
     * the ONE full-entry read, and the one place its venue is chosen:
-    * under [[localReadBudget]] the chain decodes driver-side with zero
-    * Spark jobs ([[readEntriesLocalParquet]]); at or past it the
-    * distributed chokepoint collects. Always an O(1)-indexed Seq. */
+    * under [[localReadBudget]] each chain dir comes from the per-JVM
+    * [[manifestDirCache]], decoded at most once with zero Spark jobs
+    * ([[readEntriesLocalParquet]]); at or past it the distributed
+    * manifest relation collects. Always an O(1)-indexed Seq. */
   private[graft] def entries(spark: SparkSession, meta: SnapshotMeta,
                              removes: Seq[String] = Nil): Seq[Entry] =
-    if (meta.manifestBytes < localReadBudget(spark))
+    if (localVenue(spark, meta))
       readEntriesLocalParquet(spark.sparkContext.hadoopConfiguration,
         meta.manifestDirs, meta.removedPaths ++ removes)
         .filter(_.path.nonEmpty)
-    else entriesDataset(spark, meta, removes).collect().toSeq
+    else manifestRelation(spark, meta, removes).collect().toSeq
+
+  /** The entries of `meta` that `keep` admits. Under the budget the
+    * memoized [[entries]] are filtered on the driver (zero jobs); past
+    * it `distributed` selects where the entries live and only the
+    * survivors reach the driver. */
+  private def selectEntries(spark: SparkSession, meta: SnapshotMeta)
+      (keep: Entry => Boolean)
+      (distributed: org.apache.spark.sql.Dataset[ManifestEntry] =>
+        org.apache.spark.sql.Dataset[ManifestEntry]): Seq[Entry] =
+    if (localVenue(spark, meta)) entries(spark, meta).filter(keep)
+    else distributed(manifestRelation(spark, meta, Nil)).collect().toSeq
 
   /** Write-amplification ledger for one snapshot transition:
     * `carried*` counts files present in BOTH versions (carried by
@@ -3057,13 +3159,13 @@ object Manifest {
     // a bound that does not parse in the stored rendering cannot prune
     val lo = rawLo.flatMap(renderedBound(_, dt))
     val hi = rawHi.flatMap(renderedBound(_, dt))
-    val ds = entriesDataset(spark, meta)
     if (idx < 0 || cmpOpt.isEmpty || (lo.isEmpty && hi.isEmpty))
-      return ds.collect().toSeq // unprunable: the read opens every file
+      return entries(spark, meta) // unprunable: the read opens every file
     val cmp = cmpOpt.get
-    // the EXACT closure, run where the entries live (a typed filter on
-    // executors) — only surviving candidates reach the driver
-    ds.filter { e =>
+    // the EXACT closure, run where the entries live (on the driver under
+    // the budget, else a typed filter on executors) — only surviving
+    // candidates reach the driver
+    val keep: Entry => Boolean = { e =>
       if (e.stat_mins.length <= idx || e.stat_maxs.length <= idx) true
       else (Option(e.stat_mins(idx)), Option(e.stat_maxs(idx))) match {
         case (Some(mn), Some(mx)) =>
@@ -3076,7 +3178,8 @@ object Manifest {
           catch { case _: NumberFormatException => true }
         case _ => false // all-null column in this file
       }
-    }.collect().toSeq
+    }
+    selectEntries(spark, meta)(keep)(_.filter(keep))
   }
 
   /** Which files a `lo <= column <= hi` read would open (paths) —
@@ -3651,10 +3754,15 @@ object Manifest {
   def detail(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val meta = snapshotMeta(spark, dir)
-    val (nFiles, nBytes, nRows) = entriesDataset(spark, meta)
-      .toDF().agg(count(lit(1)), coalesce(sum("bytes"), lit(0L)),
-        coalesce(sum("rows"), lit(0L)))
-      .as[(Long, Long, Long)].head()
+    val (nFiles, nBytes, nRows) =
+      if (localVenue(spark, meta)) {
+        val es = entries(spark, meta)
+        (es.size.toLong, es.iterator.map(_.bytes).sum,
+          es.iterator.map(_.rows).sum)
+      } else manifestRelation(spark, meta, Nil)
+        .toDF().agg(count(lit(1)), coalesce(sum("bytes"), lit(0L)),
+          coalesce(sum("rows"), lit(0L)))
+        .as[(Long, Long, Long)].head()
     Seq((meta.version, nFiles, nBytes, nRows,
       effectivePairs(meta.ddl, meta.colMap).map(_._1),
       meta.statsCols, meta.bloomCols,
@@ -4697,21 +4805,33 @@ object Manifest {
     *    (`to.dvDirs \ from.dvDirs`) mark on CARRIED files — a
     *    carried file's mask only ever grows, and DV rows on
     *    added/removed files are covered by the first two terms. */
-  /** The file-level diff between two versions, computed WHERE the
-    * entries live (one anti-join each way over the manifest relations):
-    * only the CHANGED entries ever reach the driver, honoring the
-    * change feed's O(changed data) contract on a 10⁷-entry table. */
+  /** The file-level diff between two versions (added, removed). When
+    * both chains are under the budget it is a path-set difference of
+    * the memoized [[entries]] on the driver, zero jobs; otherwise it is
+    * computed WHERE the entries live (one anti-join each way over the
+    * manifest relations): only the CHANGED entries ever reach the
+    * driver, honoring the change feed's O(changed data) contract on a
+    * 10⁷-entry table. */
   private def entryDiff(spark: SparkSession, metaFrom: SnapshotMeta,
                         metaTo: SnapshotMeta): (Seq[Entry], Seq[Entry]) = {
     import spark.implicits._
     entryDiffChain(spark, metaFrom, metaTo).getOrElse {
-      val f = entriesDataset(spark, metaFrom).toDF()
-      val t = entriesDataset(spark, metaTo).toDF()
-      val added = t.join(f.select("path"), Seq("path"), "left_anti")
-        .as[ManifestEntry].collect().toSeq
-      val removed = f.join(t.select("path"), Seq("path"), "left_anti")
-        .as[ManifestEntry].collect().toSeq
-      (added, removed)
+      if (localVenue(spark, metaFrom) && localVenue(spark, metaTo)) {
+        val f = entries(spark, metaFrom)
+        val t = entries(spark, metaTo)
+        val fPaths = f.iterator.map(_.path).toSet
+        val tPaths = t.iterator.map(_.path).toSet
+        (t.filterNot(e => fPaths.contains(e.path)),
+          f.filterNot(e => tPaths.contains(e.path)))
+      } else {
+        val f = manifestRelation(spark, metaFrom, Nil).toDF()
+        val t = manifestRelation(spark, metaTo, Nil).toDF()
+        val added = t.join(f.select("path"), Seq("path"), "left_anti")
+          .as[ManifestEntry].collect().toSeq
+        val removed = f.join(t.select("path"), Seq("path"), "left_anti")
+          .as[ManifestEntry].collect().toSeq
+        (added, removed)
+      }
     }
   }
 
@@ -4743,38 +4863,47 @@ object Manifest {
     if (metaTo.manifestDirs.size <= metaFrom.manifestDirs.size ||
       !metaTo.manifestDirs.startsWith(metaFrom.manifestDirs)) None
     else {
-      val fs = new Path(metaTo.manifestDirs.last)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // part-less links (a pure DV attach stages no parquet) would
-      // break the union read — LIST each new dir and keep data parts
-      val newDirs = metaTo.manifestDirs.drop(metaFrom.manifestDirs.size)
-        .filter(d => fs.listStatus(new Path(d)).exists(st => st.isFile &&
-          !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith(".")))
+      val conf = spark.sparkContext.hadoopConfiguration
+      val linked = metaTo.manifestDirs.drop(metaFrom.manifestDirs.size)
       val fromRm = metaFrom.removedPaths.toSet
       val rmDelta = metaTo.removedPaths.filterNot(fromRm)
       val rmSet = rmDelta.toSet
       val adds =
-        if (newDirs.isEmpty) Seq.empty[Entry]
-        else paddedManifest(spark, newDirs, Nil)
-          .filter(col("path") =!= "").as[ManifestEntry].collect().toSeq
-          .filterNot(e => rmSet.contains(e.path))
+        if (localVenue(spark, metaTo))
+          readEntriesLocalParquet(conf, linked, rmDelta)
+            .filter(_.path.nonEmpty)
+        else {
+          // part-less links (a pure DV attach stages no parquet) would
+          // break the union read — LIST each new dir and keep data parts
+          val fs = new Path(metaTo.manifestDirs.last).getFileSystem(conf)
+          val newDirs = linked.filter(d => fs.listStatus(new Path(d))
+            .exists(st => st.isFile &&
+              !st.getPath.getName.startsWith("_") &&
+              !st.getPath.getName.startsWith(".")))
+          if (newDirs.isEmpty) Seq.empty[Entry]
+          else paddedManifest(spark, newDirs, Nil)
+            .filter(col("path") =!= "").as[ManifestEntry].collect().toSeq
+            .filterNot(e => rmSet.contains(e.path))
+        }
       Some((adds, entriesByPaths(spark, metaFrom, rmDelta)))
     }
   }
 
-  /** The subset of `meta`'s entries whose path is in `paths` —
-    * distributed selection, In-literals below the planning threshold,
-    * broadcast semi-join past it. */
+  /** The subset of `meta`'s entries whose path is in `paths`. Under the
+    * budget a set lookup over the memoized [[entries]], zero jobs; past
+    * it a distributed selection, In-literals below the planning
+    * threshold, broadcast semi-join past it. */
   private def entriesByPaths(spark: SparkSession, meta: SnapshotMeta,
                              paths: Seq[String]): Seq[Entry] = {
     import spark.implicits._
     if (paths.isEmpty) return Seq.empty
-    val ds = entriesDataset(spark, meta)
-    if (paths.size <= Merge.InListThreshold)
-      ds.filter(col("path").isin(paths: _*)).collect().toSeq
-    else ds.toDF().join(broadcast(paths.toDF("path")), Seq("path"),
-      "left_semi").as[ManifestEntry].collect().toSeq
+    val wanted = paths.toSet
+    selectEntries(spark, meta)(e => wanted.contains(e.path)) { ds =>
+      if (paths.size <= Merge.InListThreshold)
+        ds.filter(col("path").isin(paths: _*))
+      else ds.toDF().join(broadcast(paths.toDF("path")), Seq("path"),
+        "left_semi").as[ManifestEntry]
+    }
   }
 
   private def changeParts(spark: SparkSession, root: Path,
@@ -5204,7 +5333,16 @@ object Manifest {
       : (Long, Seq[Entry], Seq[Entry], Boolean) = {
     import spark.implicits._
     val classify = deleteTierClassifier(spark, meta, pCol, sqlP)
-    val ents = entriesDataset(spark, meta)
+    if (localVenue(spark, meta)) {
+      // under the budget: classify the memoized entries on the driver
+      val tiered = entries(spark, meta).map(e => (classify(e), e))
+      val full = tiered.collect { case (1, e) => e }
+      val straddlers = tiered.collect { case (2, e) => e }
+      val nTotal = tiered.size.toLong
+      return if (nTotal > 0 && full.size == nTotal) (nTotal, Nil, Nil, true)
+        else (nTotal, full, straddlers, false)
+    }
+    val ents = manifestRelation(spark, meta, Nil)
     // count pass maps to the bare tier int — flowing whole entries
     // through the aggregate serialized every one (measured 35 s vs
     // ~1 s at 10⁷ entries)
@@ -5651,14 +5789,7 @@ object Manifest {
               col(tkP) === col(mk)
             }.reduce(_ && _), "inner")
             .select(col("__rel"))).flatten.toSet
-          val cands: Seq[Entry] =
-            if (touchedPaths.isEmpty) Seq.empty
-            else {
-              val b = spark.sparkContext.broadcast(touchedPaths)
-              try entriesDataset(spark, meta)
-                .filter(e => b.value.contains(e.path)).collect().toSeq
-              finally b.destroy()
-            }
+          val cands = entriesByPaths(spark, meta, touchedPaths.toSeq)
           maskRows(readWithPos(spark, root, cands, meta.ddl),
             dvRelation(spark, root, meta.dvDirs))
         case None =>
@@ -6001,14 +6132,7 @@ object Manifest {
     if (meta.dvDirs.isEmpty) return 0L
     val dvPaths = dvTouchedPaths(spark, root, meta.dvDirs)
     // live ∩ DV'd, resolved where the entries live; O(DV'd) driver heap
-    val dvd: Seq[Entry] =
-      if (dvPaths.isEmpty) Seq.empty
-      else {
-        val b = spark.sparkContext.broadcast(dvPaths)
-        try entriesDataset(spark, meta).filter(e => b.value.contains(e.path))
-          .collect().toSeq
-        finally b.destroy() // long-lived sessions: don't leak per cycle
-      }
+    val dvd = entriesByPaths(spark, meta, dvPaths.toSeq)
     if (dvd.isEmpty) {
       // only inert vectors (their files already rewritten): drop them;
       // every entry carries over through the chain subtraction
@@ -6236,22 +6360,17 @@ object Manifest {
     * argument as [[overwritePartitionsSliced]]). */
   private def partitionCandidates(spark: SparkSession, meta: SnapshotMeta,
                                   partitionCol: String, wanted: Set[String],
-                                  wantNull: Boolean): Seq[Entry] = {
-    // driver-local venue under the planning budget ([[entries]]' local
-    // decode, zero Spark jobs); the predicate is the same either way
-    if (meta.manifestBytes < localReadBudget(spark)) {
-      val live = entries(spark, meta)
-      if (partitionValuesSafe(meta.ddl, partitionCol))
-        live.filter(e => e.overflow || e.values.exists(wanted.contains) ||
-          (wantNull && e.has_null))
-      else live
-    } else if (partitionValuesSafe(meta.ddl, partitionCol)) {
+                                  wantNull: Boolean): Seq[Entry] =
+    if (!partitionValuesSafe(meta.ddl, partitionCol)) entries(spark, meta)
+    else {
+      // the predicate is the same in either venue
       val cond = col("overflow") ||
         arrays_overlap(col("values"), typedLit(wanted.toSeq)) ||
         (if (wantNull) col("has_null") else lit(false))
-      entriesDataset(spark, meta).filter(cond).collect().toSeq
-    } else entriesDataset(spark, meta).collect().toSeq
-  }
+      selectEntries(spark, meta)(e => e.overflow ||
+        e.values.exists(wanted.contains) || (wantNull && e.has_null))(
+        _.filter(cond))
+    }
 
   /** OPTIMIZE: rewrite the snapshot's small files (< `smallBytes`) into
     * ~`targetBytes` files, swap atomically. Untouched files carry over
@@ -6285,11 +6404,18 @@ object Manifest {
     // an UNSAFE partition rendering (TimestampType) cannot scope: the
     // value sets assert nothing, so every small file stays a candidate
     // — correct, just unscoped (same soundness rule as the overwrite)
+    val scoped = values.nonEmpty && partitionValuesSafe(meta.ddl, pCol)
     val cond =
-      if (values.isEmpty || !partitionValuesSafe(meta.ddl, pCol)) smallCond
+      if (!scoped) smallCond
       else smallCond && (col("overflow") ||
         arrays_overlap(col("values"), typedLit(values)))
-    val small = entriesDataset(spark, meta).filter(cond).collect().toSeq
+    // the driver twin of `cond`: arrays_overlap matches on a shared
+    // non-null element only
+    val wanted = values.toSet
+    val small = selectEntries(spark, meta)(e => e.bytes < smallBytes &&
+      (!scoped || e.overflow ||
+        e.values.exists(x => x != null && wanted.contains(x))))(
+      _.filter(cond))
     if (small.size < 2) return 0L // nothing to gain
     val total = small.map(_.bytes).sum
     val nOut = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
